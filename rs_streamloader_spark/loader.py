@@ -245,11 +245,12 @@ class Loader:
                         .load(stage.data_prefix)
                     )
                     # COPY columnMap semantics against the existing
-                    # target schema (types.ts:32-40)
+                    # target schema (types.ts:32-40); the cheap test
+                    # first, since exists() lists every version dir
                     if (
-                        hasattr(self.sink, "exists")
+                        (cs.column_map != "auto" or cs.jsonpaths)
+                        and hasattr(self.sink, "exists")
                         and self.sink.exists()
-                        and (cs.column_map != "auto" or cs.jsonpaths)
                     ):
                         from rs_streamloader_spark.sources.copy_reader import (
                             align_columns,

@@ -334,3 +334,174 @@ class TestAppendAndReplayContracts:
         reopened = NativeTableSink(spark, sink.root)
         reopened.insert_batch(_rows(spark, range(10), tag="dup"), batch_id=0)
         assert reopened.read().count() == 80
+
+
+class TestUpsertKeyParity:
+    """NULL and duplicate keys through the bucketed upsert, pinned to
+    the DELETE-then-INSERT semantics: a NULL key never equals another
+    key, so target rows with a NULL key are never replaced; every
+    update row lands under ``dedupe=None``; ``dedupe="last"`` keeps one
+    update row per key, NULL counted as one key; target duplicates of a
+    key the batch does not touch are left alone."""
+
+    SCHEMA = "id INT, payload STRING"
+    TARGET = [(i, f"base_{i}") for i in range(20)] + [
+        (None, "t_null_1"),
+        (None, "t_null_2"),
+        (7, "t_dup_7"),
+        (9, "t_dup_9"),
+    ]
+    UPDATES = [
+        (None, "u_null_a"),
+        (None, "u_null_b"),
+        (3, "u_3a"),
+        (3, "u_3b"),
+        (7, "u_7"),
+    ]
+
+    def _by_key(self, sink):
+        out: dict = {}
+        for r in sink.read().collect():
+            out.setdefault(r.id, []).append(r.payload)
+        return {k: sorted(v) for k, v in out.items()}
+
+    def _seeded(self, spark, sink):
+        sink.upsert(spark.createDataFrame(self.TARGET, self.SCHEMA), id_field="id")
+        assert self._by_key(sink)[None] == ["t_null_1", "t_null_2"]
+        return spark.createDataFrame(self.UPDATES, self.SCHEMA)
+
+    def test_dedupe_none_lands_every_null_and_duplicate_update(self, spark, sink):
+        sink.upsert(self._seeded(spark, sink), id_field="id")
+        got = self._by_key(sink)
+        assert got[None] == ["t_null_1", "t_null_2", "u_null_a", "u_null_b"]
+        assert got[3] == ["u_3a", "u_3b"]
+        assert got[7] == ["u_7"]  # both target rows of key 7 replaced
+        assert got[9] == ["base_9", "t_dup_9"]
+        assert got[4] == ["base_4"]
+        assert sum(map(len, got.values())) == 26
+
+    def test_dedupe_last_lands_one_null_key_row(self, spark, sink):
+        sink.upsert(self._seeded(spark, sink), id_field="id", dedupe="last")
+        got = self._by_key(sink)
+        # target NULL keys survive; the batch's NULL keys collapse to
+        # one row, the max by the other columns
+        assert got[None] == ["t_null_1", "t_null_2", "u_null_b"]
+        assert got[3] == ["u_3b"]
+        assert got[7] == ["u_7"]
+        assert got[9] == ["base_9", "t_dup_9"]
+        assert sum(map(len, got.values())) == 24
+
+    def test_widening_key_type_replaces_only_touched_buckets(self, spark, sink):
+        # INT ids, DOUBLE update ids: the union widens the target's key,
+        # which must not move target rows into buckets the delta does
+        # not replace (that would shadow those buckets' other rows)
+        sink.upsert(_rows(spark, range(200)), id_field="id")
+        upd = spark.createDataFrame([(3.0, "upd")], "id DOUBLE, payload STRING")
+        sink.upsert(upd, id_field="id")
+        got = sink.read().collect()
+        assert {int(r.id) for r in got} == set(range(200))
+        assert "upd" in {r.payload for r in got}
+
+    def test_first_upsert_on_empty_table_applies_dedupe(self, spark, sink):
+        sink.upsert(
+            spark.createDataFrame(self.UPDATES, self.SCHEMA),
+            id_field="id",
+            dedupe="last",
+        )
+        assert self._by_key(sink) == {
+            None: ["u_null_b"], 3: ["u_3b"], 7: ["u_7"]
+        }
+
+
+class TestUpsertJobFloor:
+    """A bucketed upsert is one shuffle: the distinct-bucket collect
+    (one map stage, one result stage) and the merge-write (one map
+    stage, one result stage) — never a cached pre-pass or a second
+    read of the staged source for an anti-join's key side."""
+
+    def _staged_body(self, spark, tmp_path, ids, tag):
+        path = str(tmp_path / f"stage_{tag}")
+        _rows(spark, ids, tag=tag).write.json(path)
+        return spark.read.schema("id INT, payload STRING").json(path)
+
+    def _upsert_capturing(self, sink, body, monkeypatch):
+        """Upsert ``body``; return (Spark jobs run, the frame the
+        delta wrote)."""
+        written = []
+        real = NativeTableSink._write_delta
+
+        def spy(self, clustered, *args, **kwargs):
+            written.append(clustered)
+            return real(self, clustered, *args, **kwargs)
+
+        monkeypatch.setattr(NativeTableSink, "_write_delta", spy)
+        dag = sink.spark.sparkContext._jsc.sc().dagScheduler()
+        j0 = int(dag.nextJobId())
+        sink.upsert(body, id_field="id", dedupe="last")
+        jobs = int(dag.nextJobId()) - j0
+        (frame,) = written
+        return jobs, frame
+
+    def test_upsert_runs_at_most_four_jobs_and_one_exchange(
+        self, spark, sink, tmp_path, monkeypatch
+    ):
+        from rs_streamloader_spark.plans.inspect import shuffle_count
+
+        sink.upsert(_rows(spark, range(200)), id_field="id")
+        body = self._staged_body(spark, tmp_path, [3, 7, 11, 150], "upd")
+        jobs, frame = self._upsert_capturing(sink, body, monkeypatch)
+        assert jobs <= 4, jobs
+        assert shuffle_count(frame) == 1
+        got = {r.id: r.payload for r in sink.read().collect()}
+        assert len(got) == 200 and got[7] == "upd_7" and got[8] == "base_8"
+
+    def test_fanout_keeps_one_exchange_and_bounds_files(
+        self, spark, sink, tmp_path, monkeypatch
+    ):
+        from rs_streamloader_spark.plans.inspect import shuffle_count
+
+        m = 3
+        sink.upsert(_rows(spark, range(200)), id_field="id")
+        monkeypatch.setenv("SPARK_GRAFT_BUCKET_WRITE_FANOUT", str(m))
+        ids = list(range(0, 200, 3))
+        body = self._staged_body(spark, tmp_path, ids, "upd")
+        _, frame = self._upsert_capturing(sink, body, monkeypatch)
+        assert shuffle_count(frame) == 1
+        (delta,) = [d for d in _version_dirs(sink.root) if d.startswith("d_")]
+        buckets = _bucket_subdirs(sink.root, delta)
+        assert len(buckets) == len(_expected_buckets(spark, ids))
+        for b in buckets:
+            files = [
+                f
+                for f in os.listdir(os.path.join(sink.root, delta, b))
+                if f.endswith(".parquet")
+            ]
+            assert 1 <= len(files) <= m
+        got = {r.id: r.payload for r in sink.read().collect()}
+        assert got == {
+            i: (f"upd_{i}" if i % 3 == 0 else f"base_{i}") for i in range(200)
+        }
+
+    def test_malformed_fanout_warns_once_and_writes_one_file_per_bucket(
+        self, spark, sink, monkeypatch, caplog
+    ):
+        import logging
+
+        import rs_streamloader_spark.sinks.native as N
+
+        monkeypatch.setattr(N, "_FANOUT_WARNED", set())
+        monkeypatch.setenv("SPARK_GRAFT_BUCKET_WRITE_FANOUT", "4x")
+        with caplog.at_level(logging.WARNING, logger=N.__name__):
+            sink.upsert(_rows(spark, range(200)), id_field="id")
+            sink.upsert(_rows(spark, [1, 2], tag="upd"), id_field="id")
+        warned = [r for r in caplog.records if "4x" in r.getMessage()]
+        assert len(warned) == 1
+        full = [d for d in _version_dirs(sink.root) if d.startswith("v_")][0]
+        for b in _bucket_subdirs(sink.root, full):
+            files = [
+                f
+                for f in os.listdir(os.path.join(sink.root, full, b))
+                if f.endswith(".parquet")
+            ]
+            assert len(files) == 1
+        assert sink.read().count() == 200

@@ -178,6 +178,47 @@ class TestLoadModes:
         assert sink.read().filter("id = 1").count() == 1
 
 
+    def test_default_column_map_never_lists_versions(
+        self, spark, stage_root, tmp_path, monkeypatch
+    ):
+        # sink.exists() walks every version dir; only a non-auto
+        # column_map uses its answer
+        calls = []
+        real = NativeTableSink.exists
+
+        def counting(self):
+            calls.append(self.root)
+            return real(self)
+
+        monkeypatch.setattr(NativeTableSink, "exists", counting)
+        for i, buckets in enumerate((None, 4)):
+            sink = NativeTableSink(
+                spark, str(tmp_path / f"t{i}"), num_buckets=buckets
+            )
+            seed = make_loader(spark, stage_root + f"seed{i}", sink)
+            seed.add_source(jsonl(TEST_ROWS))
+            seed.trunc_insert()
+            upd = make_loader(spark, stage_root + f"upd{i}", sink)
+            upd.add_source(jsonl([{**TEST_ROWS[2], "text": "UPSERT"}]))
+            upd.upsert()
+            rows = {r["id"]: r["text"] for r in sink.read().collect()}
+            assert len(rows) == 6 and rows[3] == "UPSERT"
+        assert calls == []
+
+    def test_non_auto_column_map_still_aligns_on_upsert(
+        self, spark, stage_root, sink
+    ):
+        sink.insert(spark.createDataFrame([(1, "seed")], "id BIGINT, name STRING"))
+        upd = make_loader(
+            spark, stage_root, sink, copy_settings={"column_map": "auto ignorecase"}
+        )
+        upd.add_source([{"ID": 1, "NAME": "upper"}, {"ID": 2, "NAME": "new"}])
+        assert upd.upsert() == "SUCCESS"
+        got = sink.read()
+        assert got.columns == ["id", "name"]
+        assert {r["id"]: r["name"] for r in got.collect()} == {1: "upper", 2: "new"}
+
+
 class TestNaming:
     def test_qualified_table_resolution(self, spark, stage_root):
         # spec.ts:151-181

@@ -13,8 +13,9 @@ functionally (tests/test_bucketed_sink.py) and measured at bench scale
       bucket count scaled to hold rows-per-bucket constant (the real
       deployment posture: you size buckets to the table);
     - drive 3 successive Loader.upsert(dedupe='last') rounds with a
-      FIXED 50-key batch and record per-round wall time + how many
-      buckets the REPLACE delta actually touched;
+      FIXED 50-key batch and record per-round wall time, Spark jobs
+      (the rise in the scheduler's next job id) and how many buckets
+      the REPLACE delta actually touched;
     - drive one Loader.insert round (ADDITIVE delta — O(batch) by
       construction) with 50 brand-new keys;
     - do the same seed + one upsert against an UNBUCKETED sink — the
@@ -24,13 +25,20 @@ functionally (tests/test_bucketed_sink.py) and measured at bench scale
 Expected shape (and what the artifact records): bucketed upsert time is
 governed by min(batch_keys, num_buckets) x bucket_size — constant once
 buckets outnumber batch keys — while the flat upsert grows ~linearly
-with the table. Usage:
+with the table, and the job count per upsert does not grow at all.
+Usage:
 
-    python tools/loader_stress.py [OUT.json]
+    python tools/loader_stress.py [OUT.json] [--ks 1,10] [--work DIR]
+        [--src10 DIR] [--src100 DIR]
+
+``--src10``/``--src100`` name the k=10/k=100 replicas of the base
+(``tools/scale_stress.py gen``); a scale whose replica is missing is
+recorded as an error and skipped.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -101,6 +109,17 @@ def _loader(spark, sink, stage_root: str, body):
     )
 
 
+def _timed_upsert(spark, loader) -> tuple[float, int]:
+    """(wall seconds, Spark jobs) of one ``upsert(dedupe='last')``.
+    Jobs are the rise in the scheduler's next job id, which job groups
+    and status store eviction cannot disturb."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(dag.nextJobId())
+    t0 = time.perf_counter()
+    loader.upsert(dedupe="last")
+    return round(time.perf_counter() - t0, 2), int(dag.nextJobId()) - j0
+
+
 def _dir_bytes(path: str) -> int:
     total = 0
     for root, _dirs, files in os.walk(path):
@@ -135,12 +154,12 @@ def _touched_buckets(table_root: str) -> tuple[int | None, int | None]:
     return nb, _dir_bytes(ddir)
 
 
-def run(spark, base_sf: str) -> dict:
+def run(spark, base_sf: str, ks=(1, 10, 100)) -> dict:
     from rs_streamloader_spark.sinks.native import NativeTableSink
 
     SRC[1] = base_sf
     out: dict = {"batch_keys": BATCH_KEYS, "bucketed": {}, "flat": {}}
-    for k in (1, 10, 100):
+    for k in ks:
         src = SRC[k]
         if not os.path.isdir(src):
             out["bucketed"][f"k{k}"] = {"err": f"missing scaled dir {src}"}
@@ -159,14 +178,12 @@ def run(spark, base_sf: str) -> dict:
         _loader(spark, sink, os.path.join(root, "st_seed"), events).trunc_insert()
         seed_s = round(time.perf_counter() - t0, 2)
 
-        upserts, touched, rewritten = [], [], []
+        upserts, jobs, touched, rewritten = [], [], [], []
         for r in range(1, UPSERT_ROUNDS + 1):
-            body = _batch(events, r)
-            t0 = time.perf_counter()
-            _loader(spark, sink, os.path.join(root, f"st_u{r}"), body).upsert(
-                dedupe="last"
-            )
-            upserts.append(round(time.perf_counter() - t0, 2))
+            ld = _loader(spark, sink, os.path.join(root, f"st_u{r}"), _batch(events, r))
+            secs, njobs = _timed_upsert(spark, ld)
+            upserts.append(secs)
+            jobs.append(njobs)
             nb, nbytes = _touched_buckets(tbl)
             touched.append(nb)
             rewritten.append(nbytes)
@@ -183,6 +200,7 @@ def run(spark, base_sf: str) -> dict:
             "num_buckets": BUCKETS[k],
             "seed_s": seed_s,
             "upsert_s": upserts,
+            "upsert_jobs": jobs,
             "buckets_touched": touched,
             "upsert_rewritten_bytes": rewritten,
             "table_bytes": _dir_bytes(tbl),
@@ -198,16 +216,14 @@ def run(spark, base_sf: str) -> dict:
         t0 = time.perf_counter()
         _loader(spark, flat, os.path.join(root, "st_fseed"), events).trunc_insert()
         fseed_s = round(time.perf_counter() - t0, 2)
-        t0 = time.perf_counter()
-        _loader(
-            spark, flat, os.path.join(root, "st_fu"), _batch(events, 1)
-        ).upsert(dedupe="last")
-        fup_s = round(time.perf_counter() - t0, 2)
+        ld = _loader(spark, flat, os.path.join(root, "st_fu"), _batch(events, 1))
+        fup_s, fup_jobs = _timed_upsert(spark, ld)
         fnew = _newest_commit(flat_tbl, "full")
         out["flat"][f"k{k}"] = {
             "table_rows": n_rows,
             "seed_s": fseed_s,
             "upsert_s": [fup_s],
+            "upsert_jobs": [fup_jobs],
             "upsert_rewritten_bytes": [_dir_bytes(fnew) if fnew else None],
         }
         print(f"[flat k={k}] {out['flat'][f'k{k}']}", flush=True)
@@ -273,21 +289,30 @@ def run_batch_size_sweep(spark, src: str, k: int = 10) -> dict:
 
 
 def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        _REPO_ROOT, "SCALE_STRESS_r11_loader.json"
+    global WORK
+    ap = argparse.ArgumentParser(description="Loader upsert scale stress")
+    ap.add_argument(
+        "out", nargs="?",
+        default=os.path.join(_REPO_ROOT, "SCALE_STRESS_r11_loader.json"),
     )
+    ap.add_argument("--ks", default="1,10,100", help="scales to run")
+    ap.add_argument("--work", default=WORK, help="directory for the tables and stages")
+    ap.add_argument("--src10", default=SRC[10], help="k=10 replica dir")
+    ap.add_argument("--src100", default=SRC[100], help="k=100 replica dir")
+    args = ap.parse_args()
+    WORK, SRC[10], SRC[100] = args.work, args.src10, args.src100
     from rs_streamloader_spark.session import get_session
 
     spark = get_session(app_name="rs_sl_loader_stress")
     spark.sparkContext.setLogLevel("ERROR")
     base_sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    result = run(spark, base_sf)
+    result = run(spark, base_sf, tuple(int(k) for k in args.ks.split(",")))
     if os.path.isdir(SRC[10]):
         result["batch_size_sweep_k10"] = run_batch_size_sweep(spark, SRC[10])
-    with open(out_path, "w") as fh:
+    with open(args.out, "w") as fh:
         json.dump(result, fh, indent=1, sort_keys=True)
         fh.write("\n")
-    print(f"wrote {out_path}")
+    print(f"wrote {args.out}")
 
 
 if __name__ == "__main__":
