@@ -3449,8 +3449,10 @@ def sliced_wasserstein_embeddings(
     grid, never on vectors. The per-row fold relies on vec_id being
     unique in embeddings (its PK — the scale generator offsets it per
     replica), exactly as the oracle's per-vec_id GROUP BY does. The
-    max-dim probe is a 1-row bounded collect (the manifest-pruning
-    precedent). The doc→embedding join is key-to-key shuffle-hash
+    sign arrays are EMB_DIM wide and every vector is checked to be
+    exactly that wide inside the projection, so no probe job runs and
+    a wider or narrower row fails the query instead of projecting to
+    NULL. The doc→embedding join is key-to-key shuffle-hash
     (never broadcast). numpy definitional pin in
     tests/test_statistics_sanity.py."""
     import hashlib
@@ -3460,15 +3462,22 @@ def sliced_wasserstein_embeddings(
     # (the oracle's UNNEST of an empty list yields no rows) — the
     # guard keeps parity if a generator ever emits one (ADVICE r15)
     emb = t["embeddings"].where(F.size("embedding") > 0)
-    # dim probe: ONE row, not a full-column aggregate (VERDICT r15
-    # what's-wrong #2 — the max(size) probe scanned every embedding
-    # vector to compute a constant). Embeddings are fixed-width by
-    # the generator contract (EMB_DIM — the same invariant the
-    # `size(embedding) == EMB_DIM` family guards encode), so any one
-    # row carries the dimension; slice(..., size(embedding)) keeps
-    # per-row exactness regardless.
-    first = emb.select(F.size("embedding").alias("d")).limit(1).first()
-    max_dim = first["d"] if first is not None else 0
+    # the sign arrays are EMB_DIM wide, the generator's fixed width
+    # (no probe job). A row of any other width would zip against a
+    # short or long sign array and project to a silent NULL or a
+    # truncated sum, so the width is checked per row in the same
+    # projection and a violating row fails the query.
+    emb = emb.withColumn(
+        "embedding",
+        F.when(F.size("embedding") == EMB_DIM, F.col("embedding")).otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(f"embedding width is not {EMB_DIM} for vec_id "),
+                    F.col("vec_id").cast("string"),
+                )
+            )
+        ),
+    )
     sign_arrays = []
     for k in range(_SW_SLICES):
         signs = [
@@ -3476,7 +3485,7 @@ def sliced_wasserstein_embeddings(
             if int(hashlib.md5(f"sw|{k}:{i}".encode()).hexdigest()[0], 16) % 2
             == 0
             else -1
-            for i in range(1, (max_dim or 0) + 1)
+            for i in range(1, EMB_DIM + 1)
         ]
         sign_arrays.append(
             "array(" + ",".join(f"{s}L" for s in signs) + ")"
@@ -3487,8 +3496,7 @@ def sliced_wasserstein_embeddings(
     )
     proj = [
         F.expr(
-            f"aggregate(zip_with(embedding, slice({sign_arrays[k]}, 1,"
-            " size(embedding)), (x, s) ->"
+            f"aggregate(zip_with(embedding, {sign_arrays[k]}, (x, s) ->"
             " CAST(ROUND(x * 1000000000) AS BIGINT) * s),"
             " 0L, (a, b) -> a + b)"
         ).alias(f"p{k}")

@@ -9,12 +9,39 @@ the Pandas-UDF paths.
 
 from __future__ import annotations
 
+import logging
 import os
 import sys
 import threading
 from collections import OrderedDict
 
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger(__name__)
+_ENV_WARNED: set[tuple[str, str]] = set()
+
+
+def env_int(name: str, default: int, lo: int | None = None) -> int:
+    """Integer env knob ``name``: ``default`` when unset or malformed,
+    ``lo`` when set below it. A fallback or a clamp logs one warning
+    per (knob, value) and never raises, so a bad value cannot crash a
+    module import."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        value, msg = default, "ignoring malformed %s=%r; using %d"
+    else:
+        if lo is None or value >= lo:
+            return value
+        value, msg = lo, "%s=%r is below the floor; using %d"
+    if (name, raw) not in _ENV_WARNED:
+        _ENV_WARNED.add((name, raw))
+        _LOG.warning(msg, name, raw, value)
+    return value
+
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -139,13 +166,10 @@ def _stage_cache_max() -> int:
     """Parse SPARK_GRAFT_STAGE_CACHE_MAX defensively (ADVICE r15): a
     non-integer value falls back to the default instead of crashing
     module import, and the floor of 18 (the catalog's live stage-key
-    count) keeps a too-small override from silently reintroducing the
-    guaranteed mid-sweep eviction documented above."""
-    try:
-        v = int(os.environ.get("SPARK_GRAFT_STAGE_CACHE_MAX", "32"))
-    except ValueError:
-        return 32
-    return max(v, 18)
+    count) keeps a too-small override from reintroducing the
+    guaranteed mid-sweep eviction documented above. Both log a
+    warning."""
+    return env_int("SPARK_GRAFT_STAGE_CACHE_MAX", 32, lo=18)
 
 
 _STAGE_CACHE_MAX = _stage_cache_max()

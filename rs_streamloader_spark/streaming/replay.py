@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rs_streamloader_spark.operators.registry import register
-from rs_streamloader_spark.session import _read_parquet_nanos_safe
+from rs_streamloader_spark.session import _read_parquet_nanos_safe, env_int
 from rs_streamloader_spark.streaming.joins import attribution_join_outer
 from rs_streamloader_spark.streaming.stateful import SESSION_GAP_S, sessionize_stateful
 from rs_streamloader_spark.streaming.windows import streaming_dedup
@@ -60,10 +60,13 @@ REPLAY_SHUFFLE_PARTITIONS = 4
 # micro-batches (r16 A/B over 7 replays, interleaved min-of-3:
 # width 4 = 54.6s vs width 1 = 45.0s at sf0.1, where the probe
 # derives 1); at deployment scale the same derivation widens toward
-# the session default because the staged input is TB-sized.
-_REPLAY_PARTITION_BYTES = int(
-    os.environ.get("SPARK_GRAFT_REPLAY_PARTITION_BYTES", str(64 * 1024 * 1024))
-)
+# the session default because the staged input is TB-sized. A
+# malformed override falls back to 64 MiB with a logged warning.
+def _replay_partition_bytes() -> int:
+    return env_int("SPARK_GRAFT_REPLAY_PARTITION_BYTES", 64 * 1024 * 1024)
+
+
+_REPLAY_PARTITION_BYTES = _replay_partition_bytes()
 
 
 def _replay_width(spark: SparkSession, inputs) -> int:

@@ -33,11 +33,24 @@ def _bucket_subdirs(root, vdir):
     )
 
 
+def _bucket_of(spark, ids) -> dict:
+    bucket = F.pmod(F.hash(F.col("id").cast("string")), F.lit(N_BUCKETS))
+    df = _rows(spark, ids).select("id", bucket.alias("b"))
+    return {r.id: r.b for r in df.collect()}
+
+
 def _expected_buckets(spark, ids):
-    df = _rows(spark, ids).select(
-        F.pmod(F.hash(F.col("id").cast("string")), F.lit(N_BUCKETS)).alias("b")
-    )
-    return sorted({r.b for r in df.distinct().collect()})
+    return sorted(set(_bucket_of(spark, ids).values()))
+
+
+def _jobs_of(spark, fn):
+    """(fn's result, Spark jobs it ran): the rise in the scheduler's
+    next job id, which job groups and status store eviction cannot
+    disturb."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(dag.nextJobId())
+    out = fn()
+    return out, int(dag.nextJobId()) - j0
 
 
 @pytest.fixture()
@@ -435,10 +448,9 @@ class TestUpsertJobFloor:
             return real(self, clustered, *args, **kwargs)
 
         monkeypatch.setattr(NativeTableSink, "_write_delta", spy)
-        dag = sink.spark.sparkContext._jsc.sc().dagScheduler()
-        j0 = int(dag.nextJobId())
-        sink.upsert(body, id_field="id", dedupe="last")
-        jobs = int(dag.nextJobId()) - j0
+        _, jobs = _jobs_of(
+            sink.spark, lambda: sink.upsert(body, id_field="id", dedupe="last")
+        )
         (frame,) = written
         return jobs, frame
 
@@ -505,3 +517,108 @@ class TestUpsertJobFloor:
             ]
             assert len(files) == 1
         assert sink.read().count() == 200
+
+
+class TestReadRootJobFloor:
+    """A read hands Spark one root per version dir whose bucket dirs
+    are all live, so building a read over 16 live additive deltas
+    lists its files on the driver instead of in a Spark job, which one
+    path per (version, bucket) forced past 32 paths. A version dir
+    holding more bucket dirs than Spark's discovery threshold stays
+    bucket-level: collapsed, each would list its children in a job of
+    its own."""
+
+    def _table(self, spark, root, buckets, deltas):
+        """A base of ``8 * buckets`` rows and ``deltas`` additive
+        deltas of ``4 * buckets`` new rows each; returns the sink and
+        the rows it holds."""
+        sink = NativeTableSink(spark, root, num_buckets=buckets, bucket_by="id")
+        model = {i: f"base_{i}" for i in range(8 * buckets)}
+        sink.trunc_insert(_rows(spark, list(model)))
+        for d in range(deltas):
+            ids = range(10_000 * (d + 1), 10_000 * (d + 1) + 4 * buckets)
+            sink.insert(_rows(spark, ids, tag=f"a{d}"))
+            model.update({i: f"a{d}_{i}" for i in ids})
+        return sink, model
+
+    @staticmethod
+    def _rows_of(df):
+        return {r.id: r.payload for r in df.collect()}
+
+    @pytest.mark.parametrize("buckets", [4, 16])
+    def test_reads_over_16_deltas_run_no_job_and_compact_at_most_two(
+        self, spark, tmp_path, buckets
+    ):
+        sink, model = self._table(spark, str(tmp_path / "tbl"), buckets, 16)
+        assert len([d for d in _version_dirs(sink.root) if d.startswith("a_")]) == 16
+        with sink.snapshot() as pin:
+            pinned, jobs = _jobs_of(spark, pin.read)
+            assert jobs == 0, jobs
+            assert BUCKET_COL not in pinned.columns
+            live, jobs = _jobs_of(spark, sink.read)
+            assert jobs == 0, jobs
+            assert BUCKET_COL not in live.columns
+            assert self._rows_of(pinned) == model
+            assert self._rows_of(live) == model
+        _, jobs = _jobs_of(spark, sink.compact)
+        assert jobs <= 2, jobs
+        assert self._rows_of(sink.read()) == model
+
+    def test_wide_table_read_runs_no_more_listing_jobs(self, spark, tmp_path):
+        """64 buckets: every version dir holds more bucket dirs than
+        the threshold, so each stays bucket-level and the read keeps
+        the one listing job it had, rather than one per version."""
+        sink, model = self._table(spark, str(tmp_path / "tbl"), 64, 3)
+        with sink.snapshot() as pin:
+            pinned, jobs = _jobs_of(spark, pin.read)
+            assert jobs <= 1, jobs
+            assert self._rows_of(pinned) == model
+        live, jobs = _jobs_of(spark, sink.read)
+        assert jobs <= 1, jobs
+        assert self._rows_of(live) == model
+
+
+class TestShadowedVersionReadByBucket:
+    """A version dir that still holds a shadowed bucket copy (pruning
+    deferred by a live pin) must never be read as a whole: its live
+    buckets are read one by one, so a new pin and the live read return
+    exactly the model's rows, while the old pin keeps its version."""
+
+    def test_deferred_prune_keeps_reads_exact(self, spark, sink):
+        bucket_of = _bucket_of(spark, range(1000))
+
+        def new_ids(bucket, n, start):
+            return [i for i in range(start, 1000) if bucket_of[i] == bucket][:n]
+
+        model = {i: f"base_{i}" for i in range(80)}
+        sink.trunc_insert(_rows(spark, list(model)))
+        # additive deltas in buckets 0 and 1 only
+        for d in range(3):
+            ids = new_ids(0, 3, 100 + 100 * d) + new_ids(1, 3, 100 + 100 * d)
+            sink.insert(_rows(spark, ids, tag=f"a{d}"))
+            model.update({i: f"a{d}_{i}" for i in ids})
+        before = dict(model)
+        base = [v for v in _version_dirs(sink.root) if v.startswith("v_")]
+        with sink.snapshot() as pin_a:
+            # an upsert of base keys in bucket 2, one more append to
+            # bucket 0, then a fold of buckets 0 and 1: the base
+            # version keeps shadowed copies of buckets 0-2 beside its
+            # live buckets 3-7
+            upd = [i for i in range(80) if bucket_of[i] == 2][:3]
+            sink.upsert(_rows(spark, upd, tag="upd"), id_field="id")
+            model.update({i: f"upd_{i}" for i in upd})
+            late = new_ids(0, 3, 700)
+            sink.insert(_rows(spark, late, tag="late"))
+            model.update({i: f"late_{i}" for i in late})
+            sink.compact()
+            assert len(_bucket_subdirs(sink.root, base[0])) == N_BUCKETS
+            with sink.snapshot() as pin_b:
+                got = pin_b.read().collect()
+                assert len(got) == len(model)
+                assert {r.id: r.payload for r in got} == model
+            got = sink.read().collect()
+            assert len(got) == len(model)
+            assert {r.id: r.payload for r in got} == model
+            got = pin_a.read().collect()
+            assert len(got) == len(before)
+            assert {r.id: r.payload for r in got} == before

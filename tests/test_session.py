@@ -163,3 +163,54 @@ class TestStageCache:
         S.clear_stage_cache()
         assert not df.storageLevel.useMemory
         assert len(S._STAGE_CACHE) == 0
+
+
+class TestEnvKnobs:
+    """Integer env knobs fall back or clamp with one logged warning;
+    a bad value never raises at import time."""
+
+    def test_malformed_replay_partition_bytes_falls_back(
+        self, monkeypatch, caplog
+    ):
+        import logging
+        import subprocess
+        import sys
+
+        from rs_streamloader_spark import session as S
+        from rs_streamloader_spark.streaming import replay
+
+        monkeypatch.setattr(S, "_ENV_WARNED", set())
+        monkeypatch.setenv("SPARK_GRAFT_REPLAY_PARTITION_BYTES", "64MB")
+        with caplog.at_level(logging.WARNING, logger=S.__name__):
+            assert replay._replay_partition_bytes() == 64 * 1024 * 1024
+            assert replay._replay_partition_bytes() == 64 * 1024 * 1024
+        warned = [r for r in caplog.records if "64MB" in r.getMessage()]
+        assert len(warned) == 1
+        # the module-level read runs at import: it must not crash it
+        proc = subprocess.run(
+            [
+                sys.executable,
+                "-c",
+                "import rs_streamloader_spark.streaming.replay as r;"
+                " print(r._REPLAY_PARTITION_BYTES)",
+            ],
+            capture_output=True, text=True, timeout=120,
+        )
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        assert proc.stdout.split()[-1] == str(64 * 1024 * 1024)
+
+    def test_stage_cache_max_clamp_warns(self, monkeypatch, caplog):
+        import logging
+
+        from rs_streamloader_spark import session as S
+
+        monkeypatch.setattr(S, "_ENV_WARNED", set())
+        monkeypatch.setenv("SPARK_GRAFT_STAGE_CACHE_MAX", "4")
+        with caplog.at_level(logging.WARNING, logger=S.__name__):
+            assert S._stage_cache_max() == 18
+        warned = [
+            r for r in caplog.records if "SPARK_GRAFT_STAGE_CACHE_MAX" in r.getMessage()
+        ]
+        assert len(warned) == 1
+        monkeypatch.setenv("SPARK_GRAFT_STAGE_CACHE_MAX", "40")
+        assert S._stage_cache_max() == 40

@@ -5636,6 +5636,34 @@ def test_curriculum_ntile_closed_form_matches_duckdb_on_edges(
         ), ci
 
 
+def test_sliced_wasserstein_rejects_a_wider_embedding(spark, monkeypatch):
+    """The projection assumes EMB_DIM-wide vectors. One wider row must
+    fail the query, never zip against a short sign array into a silent
+    NULL projection; the same table at the fixed width runs."""
+    import rs_streamloader_spark.operators.similarity as Sim
+
+    def tables(widths):
+        emb = spark.createDataFrame(
+            [(i, [0.01 * (i + 1)] * w) for i, w in enumerate(widths)],
+            "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+        )
+        docs = spark.createDataFrame(
+            [(i, "web" if i % 2 else "books") for i in range(len(widths))],
+            "doc_id BIGINT, source STRING",
+        )
+        return lambda _s, _d, *names: {"embeddings": emb, "documents": docs}
+
+    fixed = [Sim.EMB_DIM] * 6
+    monkeypatch.setattr(Sim, "load_tables", tables(fixed))
+    rows = Sim.sliced_wasserstein_embeddings(spark, "unused").collect()
+    assert len(rows) == 1 and rows[0]["sw_micro"] is not None
+    wide = fixed[:5] + [Sim.EMB_DIM + 1]
+    monkeypatch.setattr(Sim, "load_tables", tables(wide))
+    # AQE may wrap the raised error in a stage-materialization failure
+    with pytest.raises(Exception, match="embedding width is not"):
+        Sim.sliced_wasserstein_embeddings(spark, "unused").collect()
+
+
 def test_sliced_wasserstein_matches_numpy_definition(spark):
     """Sliced-W1 pinned from the definition: signs re-derived with
     hashlib, projections as exact integer sums, per-slice binned W1

@@ -30,10 +30,18 @@ Usage:
 
     python tools/loader_stress.py [OUT.json] [--ks 1,10] [--work DIR]
         [--src10 DIR] [--src100 DIR]
+    python tools/loader_stress.py --reads [OUT.json] [--work DIR]
 
 ``--src10``/``--src100`` name the k=10/k=100 replicas of the base
 (``tools/scale_stress.py gen``); a scale whose replica is missing is
 recorded as an error and skipped.
+
+``--reads`` measures the read side of appends instead: it appends
+READ_DELTAS additive deltas to a 4-, a 16- and a 64-bucket table and,
+after each, builds a pinned read and records the plan-build seconds and
+the Spark jobs the build ran (Spark lists the files of more than 32
+input paths in a job). It prints the JSON and writes it only to an
+OUT.json given on the command line.
 """
 
 from __future__ import annotations
@@ -109,15 +117,21 @@ def _loader(spark, sink, stage_root: str, body):
     )
 
 
-def _timed_upsert(spark, loader) -> tuple[float, int]:
-    """(wall seconds, Spark jobs) of one ``upsert(dedupe='last')``.
-    Jobs are the rise in the scheduler's next job id, which job groups
-    and status store eviction cannot disturb."""
+def _jobs_and_secs(spark, fn):
+    """(result, wall seconds, Spark jobs) of ``fn()``. Jobs are the
+    rise in the scheduler's next job id, which job groups and status
+    store eviction cannot disturb."""
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     j0 = int(dag.nextJobId())
     t0 = time.perf_counter()
-    loader.upsert(dedupe="last")
-    return round(time.perf_counter() - t0, 2), int(dag.nextJobId()) - j0
+    out = fn()
+    return out, time.perf_counter() - t0, int(dag.nextJobId()) - j0
+
+
+def _timed_upsert(spark, loader) -> tuple[float, int]:
+    """(wall seconds, Spark jobs) of one ``upsert(dedupe='last')``."""
+    _, secs, jobs = _jobs_and_secs(spark, lambda: loader.upsert(dedupe="last"))
+    return round(secs, 2), jobs
 
 
 def _dir_bytes(path: str) -> int:
@@ -253,6 +267,61 @@ def run(spark, base_sf: str, ks=(1, 10, 100)) -> dict:
     return out
 
 
+READ_BUCKETS = (4, 16, 64)
+READ_DELTAS = 16
+READ_REPEATS = 5  # pinned reads timed at the last delta count
+
+
+def run_reads(spark) -> dict:
+    """Plan-build cost of a pinned read as additive deltas pile up: a
+    base of 64 rows per bucket, then READ_DELTAS appends of 16 new rows
+    per bucket; after each append one ``snapshot().read()`` is built,
+    and at the last count READ_REPEATS more are built and the median
+    taken. Row counts are checked once at the end, outside the
+    timing."""
+    from rs_streamloader_spark.sinks.native import NativeTableSink
+
+    def rows(lo, n):
+        return spark.range(lo, lo + n).select("id", (F.col("id") * 7).alias("value"))
+
+    out: dict = {"deltas": READ_DELTAS, "tables": {}}
+    for buckets in READ_BUCKETS:
+        root = os.path.join(WORK, f"reads_b{buckets}")
+        shutil.rmtree(root, ignore_errors=True)
+        sink = NativeTableSink(
+            spark, os.path.join(root, "tbl"), num_buckets=buckets, bucket_by="id"
+        )
+        sink.trunc_insert(rows(0, 64 * buckets))
+        expected = 64 * buckets
+        per_delta = []
+        for d in range(1, READ_DELTAS + 1):
+            sink.insert(rows(1_000_000 * d, 16 * buckets))
+            expected += 16 * buckets
+            with sink.snapshot() as pin:
+                _, secs, jobs = _jobs_and_secs(spark, pin.read)
+            per_delta.append({"deltas": d, "build_s": round(secs, 3), "jobs": jobs})
+        builds = []
+        with sink.snapshot() as pin:
+            for _ in range(READ_REPEATS):
+                df, secs, jobs = _jobs_and_secs(spark, pin.read)
+                builds.append((secs, jobs))
+            got = df.count()
+        if got != expected:
+            raise RuntimeError(f"{buckets} buckets: read {got} rows, want {expected}")
+        builds.sort()
+        median_s = round(builds[len(builds) // 2][0], 3)
+        jobs = max(j for _, j in builds)
+        out["tables"][f"b{buckets}"] = {
+            "num_buckets": buckets,
+            "build_s_median": median_s,
+            "jobs": jobs,
+            "per_delta": per_delta,
+        }
+        print(f"[reads b={buckets}] build {median_s}s, {jobs} jobs", flush=True)
+        shutil.rmtree(root, ignore_errors=True)
+    return out
+
+
 def run_batch_size_sweep(spark, src: str, k: int = 10) -> dict:
     """The OTHER axis of the M3 contract: fix the table (k=10 replica,
     1M rows, 100 buckets) and sweep the BATCH — upsert cost must grow
@@ -291,20 +360,31 @@ def run_batch_size_sweep(spark, src: str, k: int = 10) -> dict:
 def main() -> None:
     global WORK
     ap = argparse.ArgumentParser(description="Loader upsert scale stress")
-    ap.add_argument(
-        "out", nargs="?",
-        default=os.path.join(_REPO_ROOT, "SCALE_STRESS_r11_loader.json"),
-    )
+    ap.add_argument("out", nargs="?", default=None)
     ap.add_argument("--ks", default="1,10,100", help="scales to run")
     ap.add_argument("--work", default=WORK, help="directory for the tables and stages")
     ap.add_argument("--src10", default=SRC[10], help="k=10 replica dir")
     ap.add_argument("--src100", default=SRC[100], help="k=100 replica dir")
+    ap.add_argument(
+        "--reads", action="store_true",
+        help="measure pinned-read plan builds over many deltas instead",
+    )
     args = ap.parse_args()
     WORK, SRC[10], SRC[100] = args.work, args.src10, args.src100
     from rs_streamloader_spark.session import get_session
 
     spark = get_session(app_name="rs_sl_loader_stress")
     spark.sparkContext.setLogLevel("ERROR")
+    if args.reads:
+        result = run_reads(spark)
+        print(json.dumps(result, sort_keys=True))
+        if args.out:
+            with open(args.out, "w") as fh:
+                json.dump(result, fh, indent=1, sort_keys=True)
+                fh.write("\n")
+        return
+    if args.out is None:
+        args.out = os.path.join(_REPO_ROOT, "SCALE_STRESS_r11_loader.json")
     base_sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     result = run(spark, base_sf, tuple(int(k) for k in args.ks.split(",")))
     if os.path.isdir(SRC[10]):
