@@ -46,7 +46,12 @@ from rs_streamloader_spark.config import (
 from rs_streamloader_spark.errors import NO_FILES, RS_LOAD_STARTED, LoaderError
 from rs_streamloader_spark.sinks.native import NativeTableSink
 from rs_streamloader_spark.sources import to_dataframe
-from rs_streamloader_spark.staging import delete_stage, write_manifest, write_stage
+from rs_streamloader_spark.staging import (
+    delete_stage,
+    stage_options,
+    write_manifest,
+    write_stage,
+)
 
 INSERT = "INSERT"
 TRUNCATE_INSERT = "TRUNCATE_INSERT"
@@ -241,6 +246,7 @@ class Loader:
                     # and fail outright on zero-row stages
                     staged = (
                         self.spark.read.schema(df.schema)
+                        .options(**stage_options(self.options.staging_format))
                         .format(self.options.staging_format)
                         .load(stage.data_prefix)
                     )

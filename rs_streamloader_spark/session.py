@@ -43,7 +43,13 @@ def env_int(name: str, default: int, lo: int | None = None) -> int:
     return value
 
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+def _cpus() -> int:
+    """``SPARK_GRAFT_CPUS``: the local master's core count and the
+    default shuffle width (32 when unset or malformed, at least 1)."""
+    return env_int("SPARK_GRAFT_CPUS", 32, lo=1)
+
+
+DEFAULT_SHUFFLE_PARTITIONS = _cpus()
 
 # executor Python workers inherit PYTHONPATH (not the driver's
 # sys.path); make our package importable for Pandas-UDF operators
@@ -61,10 +67,9 @@ def get_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{_cpus()}]")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

@@ -57,7 +57,8 @@ clustered by bucket once, and a window over (bucket, id) keeps the
 winners: the batch's rows of an id shadow the target's. The window's
 sort also orders the partitioned write, so the merge adds no stage of
 its own. The only driver-side materialization anywhere is the
-≤N-element distinct-bucket list of an update batch.
+≤N-element bucket set of an update batch, observed by one Spark job
+with no shuffle (``_touched_buckets``).
 
 Read roots: a bucketed read hands Spark one path per committed version
 dir whose bucket dirs are all live (every base or additive version that
@@ -121,18 +122,19 @@ from __future__ import annotations
 
 import json
 import logging
-import os
 import re
 import threading
 import time
 import uuid
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rs_streamloader_spark.errors import LoaderError
+from rs_streamloader_spark.session import env_int
+from rs_streamloader_spark.sources.normalize import local_frame
 
 _LOG = logging.getLogger(__name__)
 
@@ -162,7 +164,6 @@ FULL, DELTA, ADDITIVE = "full", "delta", "additive"
 _TAG = "__tag"
 
 _FANOUT_ENV = "SPARK_GRAFT_BUCKET_WRITE_FANOUT"
-_FANOUT_WARNED: set[str] = set()
 
 # auto-compaction threshold: fold additive deltas into a replace delta
 # once more than this many have accumulated (see _bucketed_append)
@@ -206,16 +207,10 @@ def _list_status_safe(fs, jpath):
 
 def _bucket_write_fanout() -> int:
     """``SPARK_GRAFT_BUCKET_WRITE_FANOUT`` as an int ≥ 1 (see
-    ``NativeTableSink._clustered``). A malformed value logs one warning
-    and falls back to 1 instead of failing every bucketed write."""
-    raw = os.environ.get(_FANOUT_ENV, "")
-    try:
-        return max(1, int(raw or 1))
-    except ValueError:
-        if raw not in _FANOUT_WARNED:
-            _FANOUT_WARNED.add(raw)
-            _LOG.warning("ignoring malformed %s=%r; using 1", _FANOUT_ENV, raw)
-        return 1
+    ``NativeTableSink._clustered``). A malformed or too-small value
+    logs one warning and falls back to 1 instead of failing every
+    bucketed write."""
+    return env_int(_FANOUT_ENV, 1, lo=1)
 
 
 def _locked(method):
@@ -665,7 +660,7 @@ class NativeTableSink:
             from pyspark.sql.types import StructType
 
             schema = StructType.fromJson(json.loads(self._spec_schema_json))
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         raise FileNotFoundError(
             f"snapshot pin at version {pin.version} of {self.root} holds"
             " no data paths and the table carries no spec schema"
@@ -990,11 +985,18 @@ class NativeTableSink:
         return sorted(roots) + sorted(wanted)
 
     def _touched_buckets(self, bucketed_df: DataFrame) -> list[int]:
-        # driver-side list bounded by num_buckets, never by data size
-        return sorted(
-            r[BUCKET_COL]
-            for r in bucketed_df.select(BUCKET_COL).distinct().collect()
+        """The sorted buckets ``bucketed_df``'s rows hash to, from one
+        Spark job with no shuffle: a ``noop`` write of the bucket
+        column observes ``collect_set`` over it. The set is merged
+        per task and on the driver, and is bounded by ``num_buckets``,
+        never by the data size."""
+        obs = Observation()
+        (
+            bucketed_df.select(BUCKET_COL)
+            .observe(obs, F.collect_set(BUCKET_COL).alias("b"))
+            .write.format("noop").mode("overwrite").save()
         )
+        return sorted(obs.get["b"])
 
     def _read_buckets(
         self, roots: list[str], schema_json: str | None = None
@@ -1133,7 +1135,7 @@ class NativeTableSink:
                 from pyspark.sql.types import StructType
 
                 schema = StructType.fromJson(json.loads(self._spec_schema_json))
-                return self.spark.createDataFrame([], schema)
+                return local_frame(self.spark, [], schema)
             raise FileNotFoundError(f"empty bucketed table {self.root} has no schema")
         if version is not None:
             if not versions:
@@ -1161,7 +1163,7 @@ class NativeTableSink:
             raise FileExistsError(f"table already exists under {self.root}")
         if isinstance(schema, str):
             schema = StructType.fromDDL(schema)
-        empty = self.spark.createDataFrame([], schema)
+        empty = local_frame(self.spark, [], schema)
         # zero-row full version: the floor marker (+ spec schema when
         # bucketed — _save_spec no-ops otherwise)
         empty.write.parquet(self._new_version_path(1))
@@ -1375,8 +1377,8 @@ class NativeTableSink:
         ids, committed as a delta version — the reference's
         touch-only-matched-keys DELETE+INSERT (RedshiftLoader.ts:
         377-380) instead of a full-table rewrite. The merge is one
-        shuffle (module docstring): the batch's distinct buckets are
-        collected first (they name the target files to read), then
+        shuffle (module docstring): the batch's bucket set is
+        observed first (it names the target files to read), then
         target and batch rows are clustered together and a window
         over (cluster keys, id) keeps the winners.
         """
@@ -1720,7 +1722,5 @@ def read_manifest(
     if not files:
         from pyspark.sql.types import StructType
 
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(m["schema"]))
-        )
+        return local_frame(spark, [], StructType.fromJson(json.loads(m["schema"])))
     return spark.read.option("mergeSchema", "true").parquet(*files)

@@ -19,6 +19,21 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 
+# Spark's default JSON timestamp patterns stop at milliseconds; staged
+# JSON parts keep every microsecond, and the read-back parses the same
+# patterns (a Redshift COPY keeps TIMEFORMAT 'auto', which takes them)
+_JSON_TIME_OPTIONS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
+
+
+def stage_options(fmt: str) -> dict:
+    """Writer/reader options shared by a ``fmt`` stage write and its
+    read-back."""
+    return _JSON_TIME_OPTIONS if fmt.lower() == "json" else {}
+
+
 @dataclass
 class StageResult:
     prefix: str  # job staging root (data + manifest live under it)
@@ -70,6 +85,7 @@ def write_stage(
     writer = (
         df.write.mode("errorifexists")
         .option("maxRecordsPerFile", max_records_per_file)
+        .options(**stage_options(fmt))
     )
     if gzip:
         writer = writer.option("compression", "gzip")

@@ -427,10 +427,11 @@ class TestUpsertKeyParity:
 
 
 class TestUpsertJobFloor:
-    """A bucketed upsert is one shuffle: the distinct-bucket collect
-    (one map stage, one result stage) and the merge-write (one map
-    stage, one result stage) — never a cached pre-pass or a second
-    read of the staged source for an anti-join's key side."""
+    """A bucketed upsert is one shuffle: the touched-bucket set (one
+    job, no shuffle: a noop write observing the bucket column) and the
+    merge-write (one map stage, one result stage) — never a cached
+    pre-pass or a second read of the staged source for an anti-join's
+    key side."""
 
     def _staged_body(self, spark, tmp_path, ids, tag):
         path = str(tmp_path / f"stage_{tag}")
@@ -454,7 +455,7 @@ class TestUpsertJobFloor:
         (frame,) = written
         return jobs, frame
 
-    def test_upsert_runs_at_most_four_jobs_and_one_exchange(
+    def test_upsert_runs_at_most_three_jobs_and_one_exchange(
         self, spark, sink, tmp_path, monkeypatch
     ):
         from rs_streamloader_spark.plans.inspect import shuffle_count
@@ -462,10 +463,21 @@ class TestUpsertJobFloor:
         sink.upsert(_rows(spark, range(200)), id_field="id")
         body = self._staged_body(spark, tmp_path, [3, 7, 11, 150], "upd")
         jobs, frame = self._upsert_capturing(sink, body, monkeypatch)
-        assert jobs <= 4, jobs
+        assert jobs <= 3, jobs
         assert shuffle_count(frame) == 1
         got = {r.id: r.payload for r in sink.read().collect()}
         assert len(got) == 200 and got[7] == "upd_7" and got[8] == "base_8"
+
+    def test_touched_buckets_is_one_job_over_the_batch(self, spark, sink):
+        ids = list(range(0, 200, 7)) + [None]
+        body = _rows(spark, ids)
+        touched, jobs = _jobs_of(
+            spark, lambda: sink._touched_buckets(sink._with_bucket(body))
+        )
+        assert jobs == 1
+        # a NULL key lands in a bucket like any other key
+        want = sink._with_bucket(body).select(BUCKET_COL).distinct().collect()
+        assert touched == sorted(r[BUCKET_COL] for r in want)
 
     def test_fanout_keeps_one_exchange_and_bounds_files(
         self, spark, sink, tmp_path, monkeypatch
@@ -499,11 +511,11 @@ class TestUpsertJobFloor:
     ):
         import logging
 
-        import rs_streamloader_spark.sinks.native as N
+        import rs_streamloader_spark.session as S
 
-        monkeypatch.setattr(N, "_FANOUT_WARNED", set())
+        monkeypatch.setattr(S, "_ENV_WARNED", set())
         monkeypatch.setenv("SPARK_GRAFT_BUCKET_WRITE_FANOUT", "4x")
-        with caplog.at_level(logging.WARNING, logger=N.__name__):
+        with caplog.at_level(logging.WARNING, logger=S.__name__):
             sink.upsert(_rows(spark, range(200)), id_field="id")
             sink.upsert(_rows(spark, [1, 2], tag="upd"), id_field="id")
         warned = [r for r in caplog.records if "4x" in r.getMessage()]

@@ -219,6 +219,19 @@ class TestLoadModes:
         assert {r["id"]: r["name"] for r in got.collect()} == {1: "upper", 2: "new"}
 
 
+class TestStagedTimestamps:
+    @pytest.mark.parametrize("ddl", ["TIMESTAMP", "TIMESTAMP_NTZ"])
+    @pytest.mark.parametrize("fmt", ["json", "parquet"])
+    def test_staging_keeps_microseconds(self, spark, stage_root, sink, ddl, fmt):
+        import datetime
+
+        ts = datetime.datetime(2021, 3, 4, 5, 6, 7, 123456)
+        ld = make_loader(spark, stage_root, sink, staging_format=fmt)
+        ld.add_source([{"id": 1, "ts": ts}], schema=f"id INT, ts {ddl}")
+        ld.insert()
+        assert sink.read().collect()[0]["ts"] == ts
+
+
 class TestNaming:
     def test_qualified_table_resolution(self, spark, stage_root):
         # spec.ts:151-181

@@ -199,6 +199,25 @@ class TestEnvKnobs:
         assert proc.returncode == 0, proc.stderr[-2000:]
         assert proc.stdout.split()[-1] == str(64 * 1024 * 1024)
 
+    def test_malformed_cpus_falls_back_at_import(self, monkeypatch):
+        import subprocess
+        import sys
+
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "4x")
+        proc = subprocess.run(
+            [
+                sys.executable,
+                "-c",
+                "import rs_streamloader_spark.session as s;"
+                " print(s.DEFAULT_SHUFFLE_PARTITIONS, s._cpus())",
+            ],
+            capture_output=True, text=True, timeout=120,
+        )
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        assert proc.stdout.split()[-2:] == ["32", "32"]
+        # one warning per (knob, value), however often it is read
+        assert proc.stderr.count("SPARK_GRAFT_CPUS='4x'") == 1, proc.stderr
+
     def test_stage_cache_max_clamp_warns(self, monkeypatch, caplog):
         import logging
 
