@@ -197,7 +197,7 @@ def _artifact_path(full: dict, full_path: str) -> str:
 
 def main() -> None:
     from rs_streamloader_spark.operators import REGISTRY
-    from rs_streamloader_spark.session import get_session
+    from rs_streamloader_spark.session import env_int, get_session
 
     spark = get_session(app_name="rs_streamloader_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -300,10 +300,9 @@ def main() -> None:
     # the same alphabetical span every run. ``query_clock`` records
     # each measurement's start offset from the first pass, so any
     # remaining stall window is machine-identifiable in the artifact.
-    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
+    runs = env_int("SPARK_GRAFT_BENCH_RUNS", 2, lo=1)
     names = sorted(REGISTRY)
-    seed_env = os.environ.get("SPARK_GRAFT_BENCH_SEED")
-    seed = int(seed_env) if seed_env else (os.getpid() ^ int(time.time()))
+    seed = env_int("SPARK_GRAFT_BENCH_SEED", os.getpid() ^ int(time.time()))
     timings: dict[str, float] = {}
     clock: dict[str, list] = {n: [] for n in names}
     t_anchor = time.perf_counter()

@@ -4,8 +4,8 @@ upsert over parquet paths (SURVEY.md §2.2 M1-M5).
 The reference's three load modes (lib/RedshiftLoader.ts:267-275,
 337-386) re-expressed for a lake table:
 
-- INSERT          → append into the live version directory
-- TRUNCATE_INSERT → write a new version, retire the old
+- INSERT          → an additive delta holding only the new rows
+- TRUNCATE_INSERT → write a new full version, retire the old
 - UPSERT          → DELETE-then-INSERT as a relational rewrite: the
   target rows whose id the batch does not carry, plus the batch,
   committed as a new version — the plain-parquet stand-in for a Delta
@@ -19,48 +19,48 @@ commit but before old-version cleanup leaves two committed versions of
 which the newer wins deterministically. Leftover directories are
 retired on the next successful commit.
 
-Two physical layouts:
-
-- **Unbucketed (default)**: one flat version directory per commit,
-  ``v_<n>_<uuid>``; upsert rewrites the whole table. Simple, correct,
-  and fine for small/medium tables.
-- **Bucketed (``num_buckets=N``)**: rows are hash-assigned to N key
-  buckets (``pmod(hash(cast(key as string)), N)``) written as
-  ``__b=<k>/`` partition subdirectories, in three version kinds:
-  full ``v_<n>`` (replaces the table), REPLACE deltas ``d_<n>``
-  (upserts: replace only the buckets whose keys appear in the batch),
-  and ADDITIVE deltas ``a_<n>`` (appends: ONLY the new rows —
-  O(batch) I/O, never a read-merge-rewrite of bucket content).
-  Readers resolve each bucket to its newest replace-kind version —
-  flooring at the newest full version, so TRUNCATE cannot resurrect
-  older rows — unioned with every additive delta newer than that
-  winner; shadowed bucket copies are pruned best-effort after replace
-  commits (resolution is correct without pruning). This is the
-  reference's touch-only-matched-keys upsert (RedshiftLoader.ts:
-  377-380) on the native path: a 0.1% update batch rewrites
-  ~0.1%·N buckets, not 100 TB, and appends never rewrite at all.
-  ``insert_batch`` carries its batch id in the delta dirname
-  (``…_b<id>_…``) as the replay marker; pruning keeps tagged dirs
-  (possibly emptied) alive so crash-replayed batches stay
-  exactly-once. The bucket count and key live in ``_bucketspec`` at
-  the table root (written atomically via tmp+rename) so re-opened
-  sinks bucket identically.
+One physical layout: rows are hash-assigned to N key buckets
+(``pmod(hash(cast(key as string)), N)``; N defaults to 1, and a
+one-bucket table needs no key column) written as ``__b=<k>/``
+partition subdirectories, in three version kinds: full ``v_<n>``
+(replaces the table), REPLACE deltas ``d_<n>`` (upserts: replace only
+the buckets whose keys appear in the batch), and ADDITIVE deltas
+``a_<n>`` (appends: ONLY the new rows — O(batch) I/O, never a
+read-merge-rewrite of bucket content). Every commit bumps the version
+number, so ``read(version=n)`` is stable under later writes. Readers
+resolve each bucket to its newest replace-kind version — flooring at
+the newest full version, so TRUNCATE cannot resurrect older rows —
+unioned with every additive delta newer than that winner; shadowed
+bucket copies are pruned best-effort after replace commits
+(resolution is correct without pruning). This is the reference's
+touch-only-matched-keys upsert (RedshiftLoader.ts:377-380) on the
+native path: a 0.1% update batch rewrites ~0.1%·N buckets, not 100 TB,
+and appends never rewrite at all (a one-bucket table's upsert rewrites
+the whole table, which is its one bucket). ``insert_batch`` carries
+its batch id in the delta dirname (``…_b<id>_…``) as the replay
+marker; pruning keeps tagged dirs (possibly emptied) alive so
+crash-replayed batches stay exactly-once. The bucket count and key,
+the table schema and the highest applied batch id live in
+``_bucketspec`` at the table root (written atomically via tmp+rename
+after every commit) so re-opened sinks bucket identically.
 
 Reference upsert semantics are preserved exactly: duplicate ids
 *within* a batch all survive (the reference COPYs every temp row into
 the target — RedshiftLoader.ts:379-380), and a NULL id matches no
 target row. ``dedupe='last'`` opts into the saner latest-wins variant.
 
-Scale: a bucketed upsert is one shuffle. The touched buckets' live rows
-and the batch's rows are unioned with a tag (0 = target, 1 = batch),
+Scale: an upsert is one shuffle. The touched buckets' live rows and
+the batch's rows are unioned with a tag (0 = target, 1 = batch),
 clustered by bucket once, and a window over (bucket, id) keeps the
 winners: the batch's rows of an id shadow the target's. The window's
 sort also orders the partitioned write, so the merge adds no stage of
-its own. The only driver-side materialization anywhere is the
-≤N-element bucket set of an update batch, observed by one Spark job
-with no shuffle (``_touched_buckets``).
+its own. A one-bucket table skips the clustering (``_clustered``):
+the window's own exchange is its one shuffle. The only driver-side
+materialization anywhere is the ≤N-element bucket set of an update
+batch on a multi-bucket table, observed by one Spark job with no
+shuffle (``_touched_buckets``).
 
-Read roots: a bucketed read hands Spark one path per committed version
+Read roots: a read hands Spark one path per committed version
 dir whose bucket dirs are all live (every base or additive version that
 nothing shadows) and a ``__b=k`` path per live bucket only for versions
 that also hold shadowed or unread buckets (``_read_roots``). Spark
@@ -71,12 +71,9 @@ bucket) put a 4-bucket table past that after 8 live deltas, so a read
 over 16 deltas paid a listing job before it read a row. The same
 threshold applies to the children of each root, so a version dir
 holding more bucket dirs than that stays bucket-level: collapsed, it
-would list its children in a job of its own. Bucketed reads set
+would list its children in a job of its own. Reads set
 ``recursiveFileLookup``, so a collapsed root infers no ``__b``
-partition column. Unbucketed reads never set it: their roots are
-version dirs whose ``ins_*``/``batch_*`` append subdirs Spark must not
-see through a root (a snapshot pin's isolation from appends rests on
-that).
+partition column.
 
 Concurrency (VERDICT r11 item 3): every mutating operation serializes
 on a table-level writer lock — an atomically-created ``_writer.lock``
@@ -106,9 +103,8 @@ resolve → durably land the marker → RE-verify the live version is
 unchanged (retry on movement, serializing against the writer lock
 after ``_PIN_ATTEMPTS``), which closes both the resolve-vs-prune race
 and the vacuum pin-listing TOCTOU with one reader-side check; the
-verified pin then freezes its resolved data-path set, isolating
-``pin.read()`` even from unbucketed ``insert()`` appends that write
-into the live version dir. ``vacuum()`` reclaims the deferred garbage
+verified pin then freezes its resolved read roots and the spec
+schema. ``vacuum()`` reclaims the deferred garbage
 once pins are released; a pin whose marker MTIME is older than
 ``_PIN_TTL_SEC`` belongs to a crashed reader and is ignored and swept
 (the reader-side mirror of the writer lock's stale-steal) — live
@@ -126,6 +122,7 @@ import re
 import threading
 import time
 import uuid
+import zlib
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -133,7 +130,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rs_streamloader_spark.errors import LoaderError
-from rs_streamloader_spark.session import env_int
 from rs_streamloader_spark.sources.normalize import local_frame
 
 _LOG = logging.getLogger(__name__)
@@ -163,10 +159,8 @@ FULL, DELTA, ADDITIVE = "full", "delta", "additive"
 # upsert merge: 0 tags a live target row, 1 an update row
 _TAG = "__tag"
 
-_FANOUT_ENV = "SPARK_GRAFT_BUCKET_WRITE_FANOUT"
-
 # auto-compaction threshold: fold additive deltas into a replace delta
-# once more than this many have accumulated (see _bucketed_append)
+# once more than this many have accumulated (see _append)
 COMPACT_AFTER = 16
 
 
@@ -205,14 +199,6 @@ def _list_status_safe(fs, jpath):
         raise
 
 
-def _bucket_write_fanout() -> int:
-    """``SPARK_GRAFT_BUCKET_WRITE_FANOUT`` as an int ≥ 1 (see
-    ``NativeTableSink._clustered``). A malformed or too-small value
-    logs one warning and falls back to 1 instead of failing every
-    bucketed write."""
-    return env_int(_FANOUT_ENV, 1, lo=1)
-
-
 def _locked(method):
     """Run a mutating sink method under the table writer lock."""
     import functools
@@ -241,16 +227,11 @@ class SnapshotPin:
     stays valid across concurrent upserts. Release with ``release()``
     or use as a context manager.
 
-    The pin freezes the resolved read roots at creation, so ``read()``
-    is isolated even from unbucketed ``insert()`` appends (which land
-    new subdirs inside the live version dir without bumping its number
-    — a bare ``read(version=n)`` would see them). On a bucketed table
-    the roots are ``_read_roots``' collapsed set: a version dir stands
-    for all its buckets when every one is live at pin time, and pruning
-    is deferred while the pin lives, so the dir's content cannot change
-    under it. Unbucketed roots are read without recursion, so the
-    ``ins_*``/``batch_*`` append subdirs that land inside a pinned
-    version dir stay invisible.
+    The pin freezes the resolved read roots at creation: ``_read_roots``'
+    collapsed set, where a version dir stands for all its buckets when
+    every one is live at pin time. Pruning is deferred while the pin
+    lives and every commit lands in a new version dir, so the content
+    under those roots cannot change.
 
     A pin whose marker mtime is older than ``_PIN_TTL_SEC`` belongs to
     a presumed-crashed reader and is swept by the next writer; a
@@ -264,17 +245,18 @@ class SnapshotPin:
         version: int,
         name: str,
         paths: list[str] | None = None,
+        spec_json: str | None = None,
     ):
         self.sink = sink
         self.version = version
         self._name = name
         self._paths = paths
         self._released = False
-        # freeze the spec schema alongside the path set: a pinned
+        # the spec schema frozen alongside the path set: a pinned
         # read then needs no mergeSchema footer sweep (one Spark job
         # per read), and the schema is exactly the table's declared
         # schema as of pin time — immune to later widening
-        self._spec_json = sink._spec_schema_json if sink.bucketed else None
+        self._spec_json = spec_json
 
     def read(self) -> DataFrame:
         return self.sink._read_pinned(self)
@@ -302,10 +284,12 @@ class NativeTableSink:
     """A parquet table rooted at ``{root}``, stored as committed
     version directories (see module docstring for the protocol).
 
-    ``num_buckets``/``bucket_by`` opt into the hash-bucketed layout;
-    both are persisted in ``{root}/_bucketspec`` on first write and
-    re-read on construction, so they only need to be passed when
-    creating a new bucketed table.
+    ``num_buckets``/``bucket_by`` set the bucket layout (default: one
+    bucket, which needs no key column); both are persisted in
+    ``{root}/_bucketspec`` on first write and re-read on construction,
+    so they only need to be passed when creating a new table. A root
+    holding committed versions but no spec was written by the old flat
+    layout and is refused.
     """
 
     def __init__(
@@ -319,6 +303,7 @@ class NativeTableSink:
         self.root = root.rstrip("/")
         self._spec_schema_json: str | None = None
         self._max_batch_id: int | None = None
+        self._spec: dict | None = None  # as last read or saved
         # writer-lock state: RLock serializes threads sharing THIS sink
         # (and makes nested mutators — append→compact — reentrant); the
         # FS lock file serializes across sink instances / processes.
@@ -326,28 +311,48 @@ class NativeTableSink:
         self._wlock_depth = 0
         self.lock_contentions = 0  # observability: times we had to wait
         self._fs_handle = None  # (FileSystem, Path class, jvm); see _fs
-        spec = self._read_spec()
+        spec = self._load_spec()
         if spec is not None:
             self.num_buckets = int(spec["num_buckets"])
             self.bucket_by = spec["bucket_by"]
-            self._spec_schema_json = spec.get("schema")
-            self._max_batch_id = spec.get("max_batch_id")
         else:
-            self.num_buckets = num_buckets
+            self.num_buckets = num_buckets or 1
             self.bucket_by = bucket_by
-            if num_buckets and self._live() is not None:
+            if self._holds_commit_markers():
                 raise ValueError(
-                    f"existing table at {self.root} was written unbucketed; "
-                    "cannot reopen with num_buckets (rewrite via trunc_insert "
-                    "on a fresh bucketed root instead)"
+                    f"existing table at {self.root} holds committed data"
+                    " but no _bucketspec: it was written unbucketed by the"
+                    " old flat layout, which is no longer read (load its"
+                    " files with spark.read.parquet into a fresh root)"
                 )
 
-    @property
-    def bucketed(self) -> bool:
-        return bool(self.num_buckets)
+    def _holds_commit_markers(self) -> bool:
+        """Whether any version dir holds a ``_SUCCESS``, at its root or
+        one level down, where the old flat layout's ``ins_*`` and
+        ``batch_<id>`` appends kept theirs. Every commit of this
+        layout lands after the root's spec, so a spec-less root with
+        a marker was written by the flat layout."""
+        fs, root, _ = self._fs(self.root)
+        if not fs.exists(root):
+            return False
+        for status in _list_status_safe(fs, root):
+            if not status.isDirectory() or _version_of(
+                status.getPath().getName()
+            ) is None:
+                continue
+            vdir = status.getPath().toString()
+            subdirs = [
+                s.getPath().toString()
+                for s in _list_status_safe(fs, status.getPath())
+                if s.isDirectory()
+            ]
+            for d in [vdir, *subdirs]:
+                if fs.exists(self._fs(f"{d}/_SUCCESS")[1]):
+                    return True
+        return False
 
     # ------------------------------------------------------------------
-    # bucket spec (bucketed tables only)
+    # bucket spec
     # ------------------------------------------------------------------
     def _spec_jpath(self):
         return self._fs(f"{self.root}/_bucketspec")
@@ -363,10 +368,30 @@ class NativeTableSink:
             fs.rename(tmp, jpath)
         stream = fs.open(jpath)
         try:
-            raw = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+            raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
         finally:
             stream.close()
-        return json.loads(bytes(raw).decode("utf-8"))
+        if not raw.startswith(b"{"):  # zlib; older specs are plain JSON
+            raw = zlib.decompress(raw)
+        return json.loads(raw.decode("utf-8"))
+
+    def _load_spec(self) -> dict | None:
+        """Read the spec and adopt its schema and batch id: on
+        construction, and under the writer lock, so a commit never
+        saves a spec older than another sink instance's."""
+        spec = self._spec = self._read_spec()
+        if spec is not None:
+            self._spec_schema_json = spec.get("schema")
+            self._max_batch_id = spec.get("max_batch_id")
+        return spec
+
+    def _spec_schema_now(self) -> str | None:
+        """The schema of the spec on disk now, for reads: another sink
+        instance may have widened it since this one loaded it. It is
+        not adopted, so a read never moves the spec or batch id this
+        instance's writes compare against."""
+        spec = self._read_spec()
+        return spec.get("schema") if spec is not None else None
 
     def _newest_spec_tmp(self):
         fs, root, _ = self._fs(self.root)
@@ -381,26 +406,35 @@ class NativeTableSink:
         return best[1] if best else None
 
     def _save_spec(self, schema) -> None:
-        """Persist bucket count/key (+ the latest schema, used to read
-        an empty bucketed table). Written after commit, atomically:
+        """Persist bucket count/key, the table schema (what live reads
+        and an empty-table read return) and the highest applied batch
+        id. Written after every commit, and before a root's first
+        commit (``_commit_spec_first``), atomically:
         the payload lands in a tmp file first and replaces the old
         spec by rename, so no crash point leaves a truncated/corrupt
         spec (a truncate-in-place ``fs.create`` would brick every
         subsequent constructor). The delete→rename window is covered
-        by tmp recovery in ``_read_spec``."""
-        if not self.bucketed:
-            return
+        by tmp recovery in ``_read_spec``.
+
+        A spec equal to the one read under the writer lock (or last
+        saved) is not rewritten. The payload is zlib-compressed JSON:
+        on a landing table of ~20 rows (2.3 KB) the plain 585-byte
+        spec was a quarter of the table's bytes, the compressed one is
+        183."""
         self._spec_schema_json = schema.json()
-        payload = json.dumps(
-            {
-                "num_buckets": self.num_buckets,
-                "bucket_by": self.bucket_by,
-                "schema": self._spec_schema_json,
-                # highest insert_batch id ever applied — the Delta-
-                # txn-version style replay guard that survives even a
-                # truncate retiring the tagged marker dirs
-                "max_batch_id": self._max_batch_id,
-            }
+        spec = {
+            "num_buckets": self.num_buckets,
+            "bucket_by": self.bucket_by,
+            "schema": self._spec_schema_json,
+            # highest insert_batch id ever applied — the Delta-
+            # txn-version style replay guard that survives even a
+            # truncate retiring the tagged marker dirs
+            "max_batch_id": self._max_batch_id,
+        }
+        if spec == self._spec:
+            return
+        payload = zlib.compress(
+            json.dumps(spec, separators=(",", ":")).encode("utf-8"), 9
         )
         fs, jpath, _ = self._spec_jpath()
         _, tmp_jpath, _ = self._fs(
@@ -408,12 +442,13 @@ class NativeTableSink:
         )
         stream = fs.create(tmp_jpath, True)
         try:
-            stream.write(bytearray(payload.encode("utf-8")))
+            stream.write(bytearray(payload))
         finally:
             stream.close()
         if fs.exists(jpath):
             fs.delete(jpath, False)
         fs.rename(tmp_jpath, jpath)
+        self._spec = spec
         # sweep older tmps (best-effort)
         for status in fs.listStatus(self._fs(self.root)[1]):
             name = status.getPath().getName()
@@ -472,6 +507,7 @@ class NativeTableSink:
             try:
                 if self._wlock_depth == 1:
                     self._acquire_fs_lock()
+                    self._load_spec()
                 yield
             finally:
                 self._wlock_depth -= 1
@@ -496,8 +532,7 @@ class NativeTableSink:
 
     def _committed_versions(self) -> list[tuple[int, str]]:
         """(n, dirname) for every version dir carrying a commit marker
-        (``_SUCCESS`` at its root, or — for tables created by
-        ``insert_batch`` — inside a batch subdirectory)."""
+        (``_SUCCESS`` at its root)."""
         fs, root, _ = self._fs(self.root)
         if not fs.exists(root):
             return []
@@ -509,46 +544,9 @@ class NativeTableSink:
             v = _version_of(name)
             if v is None:
                 continue
-            vdir = f"{self.root}/{name}"
-            fs2, success, _ = self._fs(f"{vdir}/_SUCCESS")
-            committed = fs2.exists(success)
-            if not committed:
-                # tables created by insert()/insert_batch() carry the
-                # marker inside their first write subdir
-                for sub in _list_status_safe(fs, status.getPath()):
-                    if sub.isDirectory():
-                        fs3, s3, _ = self._fs(
-                            f"{vdir}/{sub.getPath().getName()}/_SUCCESS"
-                        )
-                        if fs3.exists(s3):
-                            committed = True
-                            break
-            if committed:
+            if fs.exists(self._fs(f"{self.root}/{name}/_SUCCESS")[1]):
                 out.append((v[0], name))
         return sorted(out)
-
-    def _committed_data_paths(self) -> list[str]:
-        """Readable data roots inside the live version: the version
-        root itself when it carries a job-level ``_SUCCESS`` (trunc/
-        upsert writes), plus every write subdir that carries its own
-        marker. Subdirs without a marker are in-flight or crashed
-        writes and are never read — this is what makes appends
-        crash-consistent rather than partially visible."""
-        return self._data_paths_of(self.current_path)
-
-    def _data_paths_of(self, vdir: str) -> list[str]:
-        fs, jpath, _ = self._fs(vdir)
-        paths = []
-        fs2, success, _ = self._fs(f"{vdir}/_SUCCESS")
-        if fs2.exists(success):
-            paths.append(vdir)
-        for status in _list_status_safe(fs, jpath):
-            if status.isDirectory():
-                sub = status.getPath().getName()
-                fs3, s3, _ = self._fs(f"{vdir}/{sub}/_SUCCESS")
-                if fs3.exists(s3):
-                    paths.append(f"{vdir}/{sub}")
-        return paths
 
     def _live(self) -> tuple[int, str] | None:
         versions = self._committed_versions()
@@ -599,14 +597,9 @@ class NativeTableSink:
         collapsed read roots of ``_read_roots``. Called under a
         verified pin, so the returned paths cannot be pruned while
         that pin is live."""
-        versions = self._versions_at(n)
-        if self.bucketed:
-            won, dirs = self._bucket_paths(versions)
-            paths = [p for lst in won.values() for p in lst]
-            return self._read_roots(paths, dirs) if roots else sorted(paths)
-        if not versions:
-            return []
-        return self._data_paths_of(f"{self.root}/{versions[-1][1]}")
+        won, dirs = self._bucket_paths(self._versions_at(n))
+        paths = [p for lst in won.values() for p in lst]
+        return self._read_roots(paths, dirs) if roots else sorted(paths)
 
     def snapshot(self) -> SnapshotPin:
         """Pin the current committed version for consistent lazy
@@ -634,7 +627,11 @@ class NativeTableSink:
             live2 = self._live()
             if (live2[0] if live2 is not None else 0) == n:
                 return SnapshotPin(
-                    self, n, name, paths=self._resolved_paths_at(n, roots=True)
+                    self,
+                    n,
+                    name,
+                    paths=self._resolved_paths_at(n, roots=True),
+                    spec_json=self._spec_schema_now(),
                 )
             self._release_pin(name)  # stale before it could protect
         with self._writer_lock():
@@ -643,28 +640,35 @@ class NativeTableSink:
             n = live[0] if live is not None else 0
             name = self._create_pin(n)
             return SnapshotPin(
-                self, n, name, paths=self._resolved_paths_at(n, roots=True)
+                self,
+                n,
+                name,
+                paths=self._resolved_paths_at(n, roots=True),
+                spec_json=self._spec_schema_now(),
             )
 
     def _read_pinned(self, pin: SnapshotPin) -> DataFrame:
-        if pin._paths:
-            if self.bucketed:
-                # the spec frozen at pin creation: the declared
-                # schema as of pin time, no footer-sweep job
-                return self._read_buckets(pin._paths, pin._spec_json)
-            return self.spark.read.option("mergeSchema", "true").parquet(
-                *pin._paths
-            )
+        # the spec frozen at pin creation: the declared schema as of
+        # pin time, no footer-sweep job
+        df = self._read_buckets(pin._paths, pin._spec_json)
+        if df is not None:
+            return df
         # table was empty at pin time (version 0 / zero-row versions)
-        if self.bucketed and self._spec_schema_json:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(self._spec_schema_json))
-            return local_frame(self.spark, [], schema)
-        raise FileNotFoundError(
+        return self._empty(
             f"snapshot pin at version {pin.version} of {self.root} holds"
-            " no data paths and the table carries no spec schema"
+            " no data paths and the table carries no spec schema",
+            pin._spec_json,
         )
+
+    def _empty(self, missing: str, schema_json: str | None) -> DataFrame:
+        """A zero-row frame of the spec schema ``schema_json``;
+        FileNotFoundError with ``missing`` when there is none."""
+        if not schema_json:
+            raise FileNotFoundError(missing)
+        from pyspark.sql.types import StructType
+
+        schema = StructType.fromJson(json.loads(schema_json))
+        return local_frame(self.spark, [], schema)
 
     def export_manifest(
         self,
@@ -717,7 +721,7 @@ class NativeTableSink:
                 files.append(
                     {"path": f"{p}/{fname}", "bytes": status.getLen()}
                 )
-        schema_json = self._spec_schema_json
+        schema_json = self._spec_schema_now()
         if schema_json is None and paths:
             schema_json = (
                 self.spark.read.option("mergeSchema", "true")
@@ -738,7 +742,7 @@ class NativeTableSink:
                 "format": "rs-streamloader-native-manifest/1",
                 "table_root": self.root,
                 "version": n,
-                "bucketed": self.bucketed,
+                "num_buckets": self.num_buckets,
                 "schema": schema_json,
                 "stats_columns": list(stats_columns or []),
                 "files": sorted(files, key=lambda f: f["path"]),
@@ -790,14 +794,6 @@ class NativeTableSink:
         if not versions:
             return 0
         deleted = 0
-        if not self.bucketed:
-            keep_n, keep_name = versions[-1]
-            for vn, name in versions[:-1]:
-                fs, jpath, _ = self._fs(f"{self.root}/{name}")
-                fs.delete(jpath, True)
-                deleted += 1
-            self._retire_below(keep_n - 1, keep_name)  # stale uncommitted
-            return deleted
         live_paths = {
             p for lst in self._bucket_paths(versions)[0].values() for p in lst
         }
@@ -854,23 +850,25 @@ class NativeTableSink:
                 fs.delete(status.getPath(), True)
 
     # ------------------------------------------------------------------
-    # bucketed layout
+    # bucket layout
     # ------------------------------------------------------------------
-    def _bucket_expr(self):
-        # cast-to-string before hashing so an int→bigint drift between
-        # batches cannot silently re-home keys to different buckets
-        return F.pmod(
-            F.hash(F.col(self.bucket_by).cast("string")), F.lit(self.num_buckets)
-        )
-
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         if BUCKET_COL in df.columns:
             raise ValueError(f"column name {BUCKET_COL!r} is reserved")
+        if self.num_buckets == 1:
+            return df.withColumn(BUCKET_COL, F.lit(0))
         if self.bucket_by not in df.columns:
             raise ValueError(
                 f"bucketed table keyed on {self.bucket_by!r}; batch lacks it"
             )
-        return df.withColumn(BUCKET_COL, self._bucket_expr())
+        # cast-to-string before hashing so an int→bigint drift between
+        # batches cannot silently re-home keys to different buckets
+        return df.withColumn(
+            BUCKET_COL,
+            F.pmod(
+                F.hash(F.col(self.bucket_by).cast("string")), F.lit(self.num_buckets)
+            ),
+        )
 
     def _clustered(self, bucketed_df: DataFrame) -> tuple[DataFrame, list]:
         """Cluster rows by bucket before a ``partitionBy(BUCKET_COL)``
@@ -881,29 +879,23 @@ class NativeTableSink:
         bucket's dir — a tasks×buckets file explosion (measured: 509
         files for a 16-bucket full write, 845 for one delta, each
         paying its own writer open + commit rename, and every later
-        read/listing pays again). One hash exchange on the bucket value makes each
-        bucket one task's contiguous write — the Hive-style
-        file-per-bucket contract. Write parallelism is bounded by
-        num_buckets, which is the bucketed-table sizing knob itself
-        (production tables size num_buckets to data volume; within-
-        bucket file splitting stays available via maxRecordsPerFile).
+        read/listing pays again). One hash exchange on the bucket
+        value makes each bucket one task's contiguous write — the
+        Hive-style file-per-bucket contract. Write parallelism is
+        bounded by num_buckets, which is the bucketed-table sizing
+        knob itself (production tables size num_buckets to data
+        volume; within-bucket file splitting stays available via
+        maxRecordsPerFile). Salting a hot bucket over m tasks lost
+        where it was meant to win: hot-bucket upserts into a 1M-row,
+        100-bucket table, 90% of a 5,000-key batch in one bucket,
+        took a median 3.62 s at m=1 and 10.64 s at m=4
+        (``tools/loader_stress.py --skew``, 4-core host).
 
-        ``SPARK_GRAFT_BUCKET_WRITE_FANOUT`` (default 1) bounds extra
-        write parallelism for deployments where a hot bucket's delta
-        would serialize through one task: m > 1 salts the cluster key
-        deterministically (key-hash mod m — guide §2.5: never
-        rand()), writing ≤ m files per bucket through m× the tasks.
-        Measured locally (r16 A/B, m=4): −7% and 3× the file count at
-        sf0.1, so the one-file-per-bucket default stands; the knob is
-        the 100 TB escape hatch, not a local tuning."""
+        A one-bucket table is returned unclustered: one file per
+        bucket would make every write of it a single task."""
         keys = [F.col(BUCKET_COL)]
-        fanout = _bucket_write_fanout()
-        if fanout > 1:
-            keys.append(F.pmod(
-                F.xxhash64(F.col(self.bucket_by).cast("string")),
-                F.lit(fanout),
-            ))
-            return bucketed_df.repartition(self.num_buckets * fanout, *keys), keys
+        if self.num_buckets == 1:
+            return bucketed_df, keys
         return bucketed_df.repartition(*keys), keys
 
     def _bucket_dirs_of(self, vdir: str) -> dict[int, str]:
@@ -1006,7 +998,7 @@ class NativeTableSink:
         state (upsert/compact target reads, the version-less
         ``read()``) and snapshot pins pass a spec ``schema_json``: the
         persisted spec schema — the monotone union of every schema
-        ever written, and already what an EMPTY bucketed table read
+        ever written, and already what an EMPTY table read
         returns — is applied directly, skipping the mergeSchema footer
         sweep (a Spark job reading EVERY live file's footer per call;
         at 100 TB that is a full footer scan of every touched bucket
@@ -1030,11 +1022,20 @@ class NativeTableSink:
             reader = reader.option("mergeSchema", "true")
         return reader.parquet(*roots)
 
+    def _commit_spec_first(self, schema) -> None:
+        """Save the spec before a root's first commit (none is on disk
+        under the writer lock): a crash between that commit and the
+        spec save after it must leave a table that still opens."""
+        if self._spec is None:
+            self._save_spec(schema)
+
     def _write_full(self, clustered: DataFrame, n: int) -> None:
         """Commit ``clustered`` (a ``_clustered`` frame) as the full
         version ``n``, retiring every older version."""
+        schema = clustered.drop(BUCKET_COL).schema
+        self._commit_spec_first(schema)
         clustered.write.partitionBy(BUCKET_COL).parquet(self._new_version_path(n))
-        self._save_spec(clustered.drop(BUCKET_COL).schema)
+        self._save_spec(schema)
         self._retire_below(n - 1, "")
 
     def _write_delta(
@@ -1101,53 +1102,34 @@ class NativeTableSink:
         ``pin.read()``, which also freezes the resolved paths). A
         version read is only guaranteed stable while a pin at or below
         that version is live (or no writes happen) — otherwise pruning
-        may have reclaimed the older files. Unbucketed caveat (ADVICE
-        r14 #2): plain ``insert()`` appends subdirs into the live
-        version dir WITHOUT bumping its number, so an unbucketed
-        ``read(version=n)`` is only stable across trunc/upsert —
-        ``pin.read()``'s frozen path set is isolated from appends too.
+        may have reclaimed the older files.
 
-        Union of committed data roots only — in-flight/crashed append
-        subdirs are invisible; mergeSchema so appends that widened
-        the schema surface every column (missing → NULL)."""
+        Union of committed data roots only — in-flight/crashed version
+        dirs are invisible. The live read applies the spec schema as
+        saved on disk now, by whichever sink instance wrote last
+        (every column ever written; missing → NULL); a version read
+        merges the schema of that version's own files."""
         versions = None
         if version is not None:
             versions = self._versions_at(version)
             if not versions and version > 0:
-                # symmetric with the unbucketed branch (ADVICE r14 #3):
-                # a pin invalidated out from under a reader must fail
-                # loudly, never surface as a silent empty table. Only
-                # the explicit version=0 read (pin taken on an empty
-                # table) keeps the spec-schema empty-read semantics.
+                # ADVICE r14 #3: a pin invalidated out from under a
+                # reader must fail loudly, never surface as a silent
+                # empty table. Only the explicit version=0 read (pin
+                # taken on an empty table) keeps the spec-schema
+                # empty-read semantics.
                 raise FileNotFoundError(
                     f"no committed version <= {version} under {self.root}"
                 )
-        if self.bucketed:
-            won, listed = self._bucket_paths(versions)
-            df = self._read_buckets(
-                self._read_roots([p for lst in won.values() for p in lst], listed),
-                self._spec_schema_json if version is None else None,
-            )
-            if df is not None:
-                return df
-            # empty bucketed table: schema comes from the spec
-            if self._spec_schema_json:
-                from pyspark.sql.types import StructType
-
-                schema = StructType.fromJson(json.loads(self._spec_schema_json))
-                return local_frame(self.spark, [], schema)
-            raise FileNotFoundError(f"empty bucketed table {self.root} has no schema")
-        if version is not None:
-            if not versions:
-                raise FileNotFoundError(
-                    f"no committed version <= {version} under {self.root}"
-                )
-            vdir = f"{self.root}/{versions[-1][1]}"
-            return self.spark.read.option("mergeSchema", "true").parquet(
-                *self._data_paths_of(vdir)
-            )
-        paths = self._committed_data_paths()
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        spec_json = self._spec_schema_now()
+        won, listed = self._bucket_paths(versions)
+        df = self._read_buckets(
+            self._read_roots([p for lst in won.values() for p in lst], listed),
+            spec_json if version is None else None,
+        )
+        if df is not None:
+            return df
+        return self._empty(f"empty table {self.root} has no schema", spec_json)
 
     @_locked
     def create_table(self, schema, if_not_exists: bool = True) -> None:
@@ -1164,62 +1146,41 @@ class NativeTableSink:
         if isinstance(schema, str):
             schema = StructType.fromDDL(schema)
         empty = local_frame(self.spark, [], schema)
-        # zero-row full version: the floor marker (+ spec schema when
-        # bucketed — _save_spec no-ops otherwise)
-        empty.write.parquet(self._new_version_path(1))
+        # the spec schema, then a zero-row full version: the floor marker
         self._save_spec(schema)
+        empty.write.parquet(self._new_version_path(1))
 
     @_locked
     def insert(self, df: DataFrame) -> None:
-        """M1: append parts to the table (RedshiftLoader.ts:364-366).
-
-        Unbucketed: each append is its own commit subdir (own
-        ``_SUCCESS``), so a crash mid-append leaves an ignored
-        directory — never a partially visible batch inside a committed
-        version. Bucketed: the batch's rows commit as an ADDITIVE
-        delta (``a_<n>``) holding only the new rows — O(batch) I/O;
-        see ``_bucketed_append``."""
-        if self.bucketed:
-            self._bucketed_append(df, batch_id=None)
-            return
-        live = self._live()
-        vdir = (
-            self._new_version_path(1) if live is None else f"{self.root}/{live[1]}"
-        )
-        df.write.parquet(f"{vdir}/ins_{uuid.uuid4().hex[:8]}")
+        """M1: append parts to the table (RedshiftLoader.ts:364-366):
+        the batch's rows commit as an ADDITIVE delta (``a_<n>``)
+        holding only the new rows — O(batch) I/O; a crash mid-append
+        leaves an uncommitted, ignored dir. See ``_append``."""
+        self._append(df, batch_id=None)
 
     @_locked
     def insert_batch(self, df: DataFrame, batch_id: int) -> None:
-        """Idempotent append: each batch owns the subdirectory
-        ``batch_<id>`` of the live version and writes it with
-        overwrite, so a replayed batch (streaming checkpoint recovery)
-        lands exactly once instead of duplicating — the batchId-keyed
-        staging contract of SURVEY.md §2.4's exactly-once row.
-        Bucketed: the batch commits as an additive delta carrying the
-        id in its dirname (``a_<n>_b<id>_…``) and the spec records
-        the highest applied id, so replays are skipped."""
-        if self.bucketed:
-            # O(1) replay guard: batch ids commit in order (Structured
-            # Streaming replays only the last uncommitted batch), so
-            # id ≤ recorded max ⟺ already applied — and the spec
-            # survives truncation, where the tagged marker dirs do not
-            if self._max_batch_id is not None and batch_id <= self._max_batch_id:
-                return
-            versions = self._committed_versions()
-            # tag scan runs whenever the spec guard passes — it covers
-            # legacy tables without max_batch_id AND the crash window
-            # where the tagged dir committed but the spec update after
-            # it didn't
-            for _, name in versions:
-                if _batch_tag_of(name) == batch_id:
-                    return  # replayed batch: already committed
-            self._bucketed_append(df, batch_id=batch_id, versions=versions)
+        """Idempotent append: a replayed batch (streaming checkpoint
+        recovery) lands exactly once instead of duplicating — the
+        batchId-keyed staging contract of SURVEY.md §2.4's
+        exactly-once row. The batch commits as an additive delta
+        carrying the id in its dirname (``a_<n>_b<id>_…``) and the
+        spec records the highest applied id, so replays are skipped."""
+        # O(1) replay guard: batch ids commit in order (Structured
+        # Streaming replays only the last uncommitted batch), so
+        # id ≤ recorded max ⟺ already applied — and the spec
+        # survives truncation, where the tagged marker dirs do not
+        if self._max_batch_id is not None and batch_id <= self._max_batch_id:
             return
-        live = self._live()
-        vdir = (
-            self._new_version_path(1) if live is None else f"{self.root}/{live[1]}"
-        )
-        df.write.mode("overwrite").parquet(f"{vdir}/batch_{batch_id}")
+        versions = self._committed_versions()
+        # tag scan runs whenever the spec guard passes — it covers
+        # legacy tables without max_batch_id AND the crash window
+        # where the tagged dir committed but the spec update after
+        # it didn't
+        for _, name in versions:
+            if _batch_tag_of(name) == batch_id:
+                return  # replayed batch: already committed
+        self._append(df, batch_id=batch_id, versions=versions)
 
     def _merged_spec_schema(self, schema):
         """Union of the persisted spec schema and ``schema`` (existing
@@ -1237,7 +1198,7 @@ class NativeTableSink:
                 merged = merged.add(f)
         return merged
 
-    def _bucketed_append(
+    def _append(
         self,
         df: DataFrame,
         batch_id: int | None,
@@ -1276,6 +1237,8 @@ class NativeTableSink:
             self._write_full(clustered, 1)
             return
         n = 1 if live is None else live[0] + 1
+        schema = self._merged_spec_schema(df.schema)
+        self._commit_spec_first(schema)
         clustered.write.partitionBy(BUCKET_COL).parquet(
             self._new_additive_path(n, batch_id)
         )
@@ -1285,7 +1248,7 @@ class NativeTableSink:
                 if self._max_batch_id is None
                 else max(self._max_batch_id, batch_id)
             )
-        self._save_spec(self._merged_spec_schema(df.schema))
+        self._save_spec(schema)
         n_additive = sum(
             1 for _, name in versions if _version_of(name)[1] == ADDITIVE
         )
@@ -1300,9 +1263,8 @@ class NativeTableSink:
         is a normal replace commit (its ``_SUCCESS`` atomically
         shadows the additive rows via the ``n > base_n`` resolution
         rule), so a crash at any point leaves either the old state or
-        the compacted one — never duplicates."""
-        if not self.bucketed:
-            return
+        the compacted one — never duplicates. A one-bucket table
+        compacts by rewriting itself."""
         versions = self._committed_versions()
         paths, listed = self._bucket_paths(versions)
         additive_buckets = {
@@ -1349,17 +1311,12 @@ class NativeTableSink:
 
     @_locked
     def trunc_insert(self, df: DataFrame) -> None:
-        """M2: TRUNCATE + COPY ≈ overwrite (RedshiftLoader.ts:367-368).
-        Bucketed: a new full version — absent buckets are empty, so
-        truncated rows can never resurface from older deltas."""
+        """M2: TRUNCATE + COPY ≈ overwrite (RedshiftLoader.ts:367-368):
+        a new full version — absent buckets are empty, so truncated
+        rows can never resurface from older deltas."""
         live = self._live()
         n = 1 if live is None else live[0] + 1
-        if self.bucketed:
-            self._write_full(self._clustered(self._with_bucket(df))[0], n)
-            return
-        path = self._new_version_path(n)
-        df.write.parquet(path)
-        self._retire_below(n, path.rsplit("/", 1)[1])
+        self._write_full(self._clustered(self._with_bucket(df))[0], n)
 
     @_locked
     def upsert(self, updates: DataFrame, id_field: str = "id", dedupe: str | None = None) -> None:
@@ -1373,72 +1330,24 @@ class NativeTableSink:
         matches no target row, so target rows with a NULL id survive
         every upsert; ``dedupe='last'`` counts NULL as one id.
 
-        Bucketed tables rewrite ONLY the buckets containing updated
-        ids, committed as a delta version — the reference's
+        Only the buckets containing updated ids are rewritten,
+        committed as a delta version — the reference's
         touch-only-matched-keys DELETE+INSERT (RedshiftLoader.ts:
-        377-380) instead of a full-table rewrite. The merge is one
-        shuffle (module docstring): the batch's bucket set is
-        observed first (it names the target files to read), then
-        target and batch rows are clustered together and a window
-        over (cluster keys, id) keeps the winners.
+        377-380) instead of a full-table rewrite (a one-bucket table
+        rewrites its one bucket, and keys on any ``id_field``). The
+        merge is one shuffle (module docstring): on a multi-bucket
+        table the batch's bucket set is observed first (it names the
+        target files to read), then target and batch rows are
+        clustered together and a window over (cluster keys, id) keeps
+        the winners.
         """
         if dedupe not in (None, "last"):
             raise ValueError(f"unknown dedupe mode: {dedupe!r}")
-
-        if self.bucketed:
-            if id_field != self.bucket_by:
-                raise ValueError(
-                    f"bucketed table keyed on {self.bucket_by!r}; "
-                    f"upsert on {id_field!r} cannot prune buckets"
-                )
-            self._bucketed_upsert(updates, id_field, dedupe)
-            return
-
-        if dedupe == "last":
-            others = [c for c in updates.columns if c != id_field]
-            if not others:
-                # id-only updates: nothing to order by — any row of a
-                # key is "the" row
-                updates = updates.dropDuplicates([id_field])
-            else:
-                w = Window.partitionBy(id_field).orderBy(
-                    *[F.col(c).desc_nulls_last() for c in others]
-                )
-                updates = (
-                    updates.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn")
-                )
-        live = self._live()
-        if live is None:
-            merged = updates
-            n = 1
-            cached = None
-        else:
-            # updates feeds BOTH the anti-join key side and the union —
-            # cache it so the staged source (or an expensive upstream
-            # plan) is computed once, not twice, in the write job
-            cached = updates.cache()
-            target = self.read()
-            keep = target.join(
-                cached.select(id_field).distinct(), on=id_field, how="left_anti"
+        if self.num_buckets > 1 and id_field != self.bucket_by:
+            raise ValueError(
+                f"bucketed table keyed on {self.bucket_by!r}; "
+                f"upsert on {id_field!r} cannot prune buckets"
             )
-            # schema drift between target and updates NULL-fills the
-            # gaps (COPY 'auto' semantics) instead of erroring
-            merged = keep.unionByName(cached, allowMissingColumns=True)
-            n = live[0] + 1
-
-        path = self._new_version_path(n)
-        try:
-            merged.write.parquet(path)
-        finally:
-            if cached is not None:
-                cached.unpersist()
-        self._retire_below(n, path.rsplit("/", 1)[1])
-
-    def _bucketed_upsert(
-        self, updates: DataFrame, id_field: str, dedupe: str | None
-    ) -> None:
         versions = self._committed_versions()
         upd_b = self._with_bucket(updates)
         rows = upd_b.withColumn(_TAG, F.lit(1))
@@ -1446,7 +1355,7 @@ class NativeTableSink:
         if versions:
             # the buckets the batch's keys hash to, before any dedupe:
             # dedupe drops rows, never keys
-            touched = self._touched_buckets(upd_b)
+            touched = [0] if self.num_buckets == 1 else self._touched_buckets(upd_b)
             won, listed = self._bucket_paths(versions)
             target = self._read_buckets(
                 self._read_roots(
@@ -1680,7 +1589,7 @@ def write_directory_manifest(
             "format": "rs-streamloader-native-manifest/1",
             "table_root": data_dir,
             "version": 0,
-            "bucketed": False,
+            "num_buckets": None,
             "schema": schema_json,
             "stats_columns": list(stats_columns or []),
             "files": files,

@@ -6,9 +6,13 @@ newline-delimited JSON on its way to S3
 (lib/utils.ts:20-79). The Spark-native equivalents:
 
 - DataFrame            → passthrough (already a plan)
-- path str             → ``spark.read`` with the configured format
-- str / bytes body     → parsed as JSONL (the reference's wire format)
-  or, under ``fmt="csv"``, by Spark's CSV reader
+- path str             → ``spark.read`` with the configured format; a
+  str is a path only when it names an existing path, or has a URI
+  scheme (``s3a://``, ``file:``) and, under ``fmt="csv"``, no
+  delimiter
+- any other str / bytes body → content, as the reference's string body
+  always is: parsed as JSONL (the reference's wire format) or, under
+  ``fmt="csv"``, by Spark's CSV reader
 - list[dict] / dict    → ``local_frame``
 - iterator / generator → batched ``local_frame`` + union, giving
   bounded-memory ingestion analogous to the reference's backpressured
@@ -28,12 +32,14 @@ that way and takes 0.17 s without it.
 from __future__ import annotations
 
 import json
+import re
 from typing import Any, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StringType, StructType, _make_type_verifier
 
 GENERATOR_BATCH_ROWS = 10_000
+_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:/")
 
 
 def local_frame(spark: SparkSession, rows: Iterable, schema=None) -> DataFrame:
@@ -75,9 +81,59 @@ def local_frame(spark: SparkSession, rows: Iterable, schema=None) -> DataFrame:
     return df
 
 
+def _is_path(spark: SparkSession, body: str, delimiter: str | None) -> bool:
+    """A one-line str body names a path when it names an existing path
+    (a glob counts), or when it has a URI scheme and no CSV
+    ``delimiter``: such a body cannot be a CSV record of more than one
+    field, nor JSON, so a missing path fails as a path. Anything else
+    is content, e.g. a CSV record whose first field is a URL. An
+    http(s) URL is never listed: Hadoop's HTTP filesystem reports any
+    URL as existing without a request."""
+    if "\n" in body:
+        return False
+    if _SCHEME_RE.match(body) and (delimiter is None or delimiter not in body):
+        return True
+    if body.lower().startswith(("http:", "https:")):
+        return False
+    from rs_streamloader_spark.staging import _fs_and_path
+
+    try:
+        fs, jpath, _ = _fs_and_path(spark, body)
+        return bool(fs.globStatus(jpath))
+    except Exception:  # py4j: not a valid Hadoop path, so content
+        return False
+
+
 def _jsonl_to_df(spark: SparkSession, text: str, schema=None) -> DataFrame:
     lines = [ln for ln in text.splitlines() if ln.strip()]
-    return local_frame(spark, [json.loads(ln) for ln in lines], schema)
+    try:
+        rows = [json.loads(ln) for ln in lines]
+    except json.JSONDecodeError as exc:
+        raise ValueError(
+            f"str body is neither JSONL text nor an existing path: {exc}"
+        ) from exc
+    return local_frame(spark, rows, schema)
+
+
+def _csv_records(text: str, quote: str) -> list[str]:
+    """The CSV records of ``text``: physical lines are joined while
+    the record holds an odd count of ``quote``, i.e. while a quoted
+    field (which may hold newlines) is still open. Blank lines between
+    records are dropped."""
+    records: list[str] = []
+    buf: list[str] = []
+    open_quote = False
+    for ln in text.splitlines():
+        if not buf and not ln.strip():
+            continue
+        buf.append(ln)
+        open_quote ^= ln.count(quote) % 2 == 1
+        if not open_quote:
+            records.append("\n".join(buf))
+            buf = []
+    if buf:
+        records.append("\n".join(buf))
+    return records
 
 
 def _csv_text_to_df(
@@ -86,7 +142,10 @@ def _csv_text_to_df(
     """CSV string body → DataFrame honoring the CSV COPY knobs; the
     reference uploads string bodies verbatim and lets COPY parse them
     per the format settings, so CSV text is part of the contract."""
-    lines = [ln for ln in text.splitlines() if ln.strip()]
+    quote = '"'
+    if copy_settings is not None and copy_settings.quote is not None:
+        quote = copy_settings.quote
+    records = _csv_records(text, quote)
     reader = spark.read
     if copy_settings is not None:
         if copy_settings.quote is not None:
@@ -97,12 +156,12 @@ def _csv_text_to_df(
             reader = reader.option("header", "true")
     if schema is not None:
         reader = reader.schema(schema)
-    # a Dataset[String] of the lines, as reader.csv(rdd) builds through
-    # a Python map
-    lines_ds = getattr(local_frame(spark, lines, StringType())._jdf, "as")(
+    # a Dataset[String] of the records, as reader.csv(rdd) builds
+    # through a Python map
+    records_ds = getattr(local_frame(spark, records, StringType())._jdf, "as")(
         spark._jvm.org.apache.spark.sql.Encoders.STRING()
     )
-    return reader._df(reader._jreader.csv(lines_ds))
+    return reader._df(reader._jreader.csv(records_ds))
 
 
 def _batched(it: Iterator[dict], size: int) -> Iterator[list[dict]]:
@@ -133,7 +192,10 @@ def to_dataframe(
     if isinstance(body, bytes):
         body = body.decode("utf-8")
     if isinstance(body, str):
-        if "\n" in body or body.lstrip().startswith("{"):
+        delimiter = None
+        if fmt == "csv":
+            delimiter = (copy_settings and copy_settings.delimiter) or ","
+        if not _is_path(spark, body, delimiter):
             # inline text body: parse per the configured COPY format
             # (the reference uploads the string verbatim and COPY
             # parses it — utils.ts:66-68)
@@ -142,7 +204,7 @@ def to_dataframe(
                     spark, body, schema=schema, copy_settings=copy_settings
                 )
             return _jsonl_to_df(spark, body, schema=schema)
-        # otherwise treat as a path readable by Spark
+        # a path readable by Spark
         if copy_settings is not None:
             from rs_streamloader_spark.sources.copy_reader import read_body
 

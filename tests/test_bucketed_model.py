@@ -1,9 +1,10 @@
-"""Model-based test for the bucketed native sink: a seeded-random
-sequence of loader operations runs against BOTH the sink and an
-in-memory reference model, comparing full table contents at every
-step. This is the storage-layer analogue of the property tests —
-interleavings (append → upsert → compact → replay → reopen → truncate
-→ append …) that targeted unit tests don't enumerate.
+"""Model-based test for the native sink, with 4 buckets and with the
+default single bucket: a seeded-random sequence of loader operations
+runs against BOTH the sink and an in-memory reference model, comparing
+full table contents at every step. This is the storage-layer analogue
+of the property tests — interleavings (append → upsert → compact →
+replay → reopen → truncate → append …) that targeted unit tests don't
+enumerate.
 
 Model semantics (the loader contract):
 - insert(rows): multiset-append.
@@ -38,9 +39,18 @@ def _read_sorted(sink):
 
 @pytest.mark.parametrize("seed", [7, 1234, 987654])
 def test_random_op_sequences_match_model(spark, tmp_path, seed):
+    _run_model(spark, str(tmp_path / f"tbl_{seed}"), seed, N_BUCKETS)
+
+
+@pytest.mark.parametrize("seed", [7, 1234, 987654])
+def test_random_op_sequences_match_model_default_sink(spark, tmp_path, seed):
+    """The same sequences on a default-constructed (one-bucket) sink."""
+    _run_model(spark, str(tmp_path / f"tbl_{seed}"), seed, None)
+
+
+def _run_model(spark, root, seed, num_buckets):
     rng = random.Random(seed)
-    root = str(tmp_path / f"tbl_{seed}")
-    sink = NativeTableSink(spark, root, num_buckets=N_BUCKETS, bucket_by="id")
+    sink = NativeTableSink(spark, root, num_buckets=num_buckets, bucket_by="id")
     model: list[tuple[int, str]] = []
     applied_batches: set[int] = set()
     next_batch = 0
@@ -91,9 +101,9 @@ def test_random_op_sequences_match_model(spark, tmp_path, seed):
                 # pre-write reopen = creation: args required (the
                 # documented contract — the spec doesn't exist yet)
                 sink = NativeTableSink(
-                    spark, root, num_buckets=N_BUCKETS, bucket_by="id"
+                    spark, root, num_buckets=num_buckets, bucket_by="id"
                 )
-            assert sink.bucketed and sink.num_buckets == N_BUCKETS
+            assert sink.num_buckets == (num_buckets or 1)
         if model or sink.exists():
             assert _read_sorted(sink) == sorted(model), f"step {step}: {op}"
     # end state must also survive a final compact + reopen

@@ -118,7 +118,7 @@ class TestBucketedLayout:
     def test_reopen_reads_bucketspec(self, spark, sink):
         sink.upsert(_rows(spark, range(20)), id_field="id")
         reopened = NativeTableSink(sink.spark, sink.root)  # no params
-        assert reopened.bucketed and reopened.num_buckets == N_BUCKETS
+        assert reopened.num_buckets == N_BUCKETS
         reopened.upsert(_rows(spark, [5], tag="upd"), id_field="id")
         assert reopened.read().filter("payload = 'upd_5'").count() == 1
         # the reopened sink pruned buckets too (one delta, not a full copy)
@@ -152,10 +152,24 @@ class TestBucketedLayout:
             sink.upsert(_rows(spark, [2]), id_field="payload")
 
     def test_reopen_unbucketed_as_bucketed_refuses(self, spark, tmp_path):
-        plain = NativeTableSink(spark, str(tmp_path / "t"))
-        plain.upsert(_rows(spark, [1]), id_field="id")
-        with pytest.raises(ValueError, match="unbucketed"):
-            NativeTableSink(spark, str(tmp_path / "t"), num_buckets=4)
+        """A root holding committed versions but no spec was written
+        by the old flat layout; opening it, with or without a bucket
+        count, refuses instead of misreading it."""
+        root = tmp_path / "t"
+        _rows(spark, [1]).write.parquet(str(root / "v_1_01df1a7e"))
+        for kwargs in ({}, {"num_buckets": 4}):
+            with pytest.raises(ValueError, match="unbucketed"):
+                NativeTableSink(spark, str(root), **kwargs)
+
+    def test_insert_only_flat_root_refuses(self, spark, tmp_path):
+        """The old flat layout's appends committed inside the version
+        dir (``ins_*``, ``batch_<id>``) and left no marker at its
+        root; such a root is refused too, not opened as empty."""
+        for sub in ("ins_5c1e", "batch_3"):
+            root = tmp_path / sub
+            _rows(spark, [1]).write.parquet(str(root / "v_1_01df1a7e" / sub))
+            with pytest.raises(ValueError, match="unbucketed"):
+                NativeTableSink(spark, str(root))
 
     def test_schema_drift_null_fills(self, spark, sink):
         sink.upsert(_rows(spark, [1, 2]), id_field="id")
@@ -197,27 +211,16 @@ class TestBucketedLayout:
         v1 = sink.read(version=1)
         assert set(v1.columns) == {"id", "payload"}
 
-    def test_bucket_write_fanout_bounds_files_per_bucket(
-        self, spark, sink, monkeypatch
-    ):
-        """With SPARK_GRAFT_BUCKET_WRITE_FANOUT=m, a bucketed write
-        may produce up to m files per bucket (hot-bucket write
-        parallelism at scale) — never the tasks×buckets explosion —
-        and reads are unchanged."""
-        m = 3
-        monkeypatch.setenv("SPARK_GRAFT_BUCKET_WRITE_FANOUT", str(m))
+    def test_full_write_is_one_file_per_bucket(self, spark, sink):
         sink.upsert(_rows(spark, range(200)), id_field="id")
-        root = sink.root
-        (full,) = _version_dirs(root)
-        for b in _bucket_subdirs(root, full):
+        (full,) = _version_dirs(sink.root)
+        for b in _bucket_subdirs(sink.root, full):
             files = [
                 f
-                for f in os.listdir(os.path.join(root, full, b))
+                for f in os.listdir(os.path.join(sink.root, full, b))
                 if f.endswith(".parquet")
             ]
-            assert 1 <= len(files) <= m
-        got = {r.id: r.payload for r in sink.read().collect()}
-        assert got == {i: f"base_{i}" for i in range(200)}
+            assert len(files) == 1, (b, files)
 
 
 class TestAppendAndReplayContracts:
@@ -280,14 +283,36 @@ class TestAppendAndReplayContracts:
         sink = NativeTableSink(spark, root, num_buckets=N_BUCKETS, bucket_by="id")
         sink.upsert(_rows(spark, range(20)), id_field="id")
         spec_path = os.path.join(root, "_bucketspec")
-        with open(spec_path) as fh:
+        with open(spec_path, "rb") as fh:
             payload = fh.read()
         os.remove(spec_path)
-        with open(os.path.join(root, "_bucketspec.tmp.deadbeef"), "w") as fh:
+        with open(os.path.join(root, "_bucketspec.tmp.deadbeef"), "wb") as fh:
             fh.write(payload)
         reopened = NativeTableSink(spark, root)
-        assert reopened.bucketed and reopened.num_buckets == N_BUCKETS
+        assert reopened.num_buckets == N_BUCKETS
         assert reopened.read().count() == 20
+
+    def test_plain_json_spec_still_opens(self, spark, tmp_path):
+        """A spec written before specs were compressed is plain JSON;
+        the constructor reads it, and the next commit rewrites it."""
+        import json
+        import zlib
+
+        root = str(tmp_path / "tbl")
+        sink = NativeTableSink(spark, root, num_buckets=N_BUCKETS, bucket_by="id")
+        sink.insert_batch(_rows(spark, range(20)), batch_id=3)
+        spec_path = os.path.join(root, "_bucketspec")
+        with open(spec_path, "rb") as fh:
+            spec = json.loads(zlib.decompress(fh.read()))
+        os.remove(spec_path)
+        os.remove(os.path.join(root, "._bucketspec.crc"))
+        with open(spec_path, "w") as fh:
+            json.dump(spec, fh)
+        reopened = NativeTableSink(spark, root)
+        assert reopened.num_buckets == N_BUCKETS
+        reopened.insert_batch(_rows(spark, range(20)), batch_id=3)  # replay
+        reopened.insert(_rows(spark, [100]))
+        assert NativeTableSink(spark, root).read().count() == 21
 
     def test_replay_skipped_after_truncate_retires_marker_dirs(
         self, spark, tmp_path
@@ -479,56 +504,47 @@ class TestUpsertJobFloor:
         want = sink._with_bucket(body).select(BUCKET_COL).distinct().collect()
         assert touched == sorted(r[BUCKET_COL] for r in want)
 
-    def test_fanout_keeps_one_exchange_and_bounds_files(
-        self, spark, sink, tmp_path, monkeypatch
-    ):
-        from rs_streamloader_spark.plans.inspect import shuffle_count
 
-        m = 3
-        sink.upsert(_rows(spark, range(200)), id_field="id")
-        monkeypatch.setenv("SPARK_GRAFT_BUCKET_WRITE_FANOUT", str(m))
-        ids = list(range(0, 200, 3))
-        body = self._staged_body(spark, tmp_path, ids, "upd")
-        _, frame = self._upsert_capturing(sink, body, monkeypatch)
-        assert shuffle_count(frame) == 1
-        (delta,) = [d for d in _version_dirs(sink.root) if d.startswith("d_")]
-        buckets = _bucket_subdirs(sink.root, delta)
-        assert len(buckets) == len(_expected_buckets(spark, ids))
-        for b in buckets:
-            files = [
-                f
-                for f in os.listdir(os.path.join(sink.root, delta, b))
-                if f.endswith(".parquet")
-            ]
-            assert 1 <= len(files) <= m
+class TestDefaultSinkJobFloor:
+    """A default (one-bucket) sink runs no bucket discovery and no
+    clustering exchange: an upsert is the merge write's two jobs (its
+    window's exchange is the one shuffle), an append or a truncate is
+    one write job, and a pinned read lists its files on the driver
+    with the spec schema, so building it runs no job."""
+
+    @pytest.fixture()
+    def sink(self, spark, tmp_path):
+        sink = NativeTableSink(spark, str(tmp_path / "tbl"))
+        sink.trunc_insert(_rows(spark, range(50)))
+        return sink
+
+    def test_upsert_runs_at_most_two_jobs(self, spark, sink):
+        _, jobs = _jobs_of(
+            spark,
+            lambda: sink.upsert(_rows(spark, [3, 70], tag="upd"), id_field="id"),
+        )
+        assert jobs <= 2, jobs
         got = {r.id: r.payload for r in sink.read().collect()}
-        assert got == {
-            i: (f"upd_{i}" if i % 3 == 0 else f"base_{i}") for i in range(200)
-        }
+        assert len(got) == 51 and got[3] == "upd_3" and got[4] == "base_4"
 
-    def test_malformed_fanout_warns_once_and_writes_one_file_per_bucket(
-        self, spark, sink, monkeypatch, caplog
-    ):
-        import logging
+    def test_appends_and_truncate_run_at_most_one_job(self, spark, sink):
+        _, jobs = _jobs_of(spark, lambda: sink.insert(_rows(spark, [60])))
+        assert jobs <= 1, jobs
+        _, jobs = _jobs_of(
+            spark, lambda: sink.insert_batch(_rows(spark, [61]), batch_id=0)
+        )
+        assert jobs <= 1, jobs
+        assert sink.read().count() == 52
+        _, jobs = _jobs_of(spark, lambda: sink.trunc_insert(_rows(spark, [1])))
+        assert jobs <= 1, jobs
+        assert sink.read().count() == 1
 
-        import rs_streamloader_spark.session as S
-
-        monkeypatch.setattr(S, "_ENV_WARNED", set())
-        monkeypatch.setenv("SPARK_GRAFT_BUCKET_WRITE_FANOUT", "4x")
-        with caplog.at_level(logging.WARNING, logger=S.__name__):
-            sink.upsert(_rows(spark, range(200)), id_field="id")
-            sink.upsert(_rows(spark, [1, 2], tag="upd"), id_field="id")
-        warned = [r for r in caplog.records if "4x" in r.getMessage()]
-        assert len(warned) == 1
-        full = [d for d in _version_dirs(sink.root) if d.startswith("v_")][0]
-        for b in _bucket_subdirs(sink.root, full):
-            files = [
-                f
-                for f in os.listdir(os.path.join(sink.root, full, b))
-                if f.endswith(".parquet")
-            ]
-            assert len(files) == 1
-        assert sink.read().count() == 200
+    def test_pinned_read_runs_no_job(self, spark, sink):
+        sink.insert(_rows(spark, [60]))
+        with sink.snapshot() as pin:
+            df, jobs = _jobs_of(spark, pin.read)
+            assert jobs == 0, jobs
+            assert df.count() == 51
 
 
 class TestReadRootJobFloor:

@@ -136,7 +136,7 @@ class TestTwoWriterRace:
     def test_nested_compact_is_reentrant_not_deadlocked(
         self, spark, tmp_path, monkeypatch
     ):
-        """insert_batch → _bucketed_append → compact() runs compact
+        """insert_batch → _append → compact() runs compact
         with the lock already held; the RLock + depth counter must
         re-enter instead of deadlocking, and the lock must be gone
         after the call."""

@@ -288,6 +288,75 @@ class TestBodyNormalization:
         )
         assert {r["id"]: r["name"] for r in df.collect()} == {1: "alpha", 2: "beta"}
 
+    def test_csv_string_body_keeps_quoted_newlines(self, spark, stage_root):
+        from rs_streamloader_spark.config import CopySettings
+        from rs_streamloader_spark.sources import to_dataframe
+
+        df = to_dataframe(
+            spark,
+            'id,note\n1,"two\nlines"\n2,x\n',
+            fmt="csv",
+            schema="id INT, note STRING",
+            copy_settings=CopySettings(format="CSV", ignore_header=1),
+        )
+        assert sorted(tuple(r) for r in df.collect()) == [(1, "two\nlines"), (2, "x")]
+        # a custom quote character opens and closes the field the same way
+        df = to_dataframe(
+            spark,
+            "1|'a\n\nb'\n2|'c'\n",
+            fmt="csv",
+            schema="id INT, note STRING",
+            copy_settings=CopySettings(format="CSV", delimiter="|", quote="'"),
+        )
+        assert sorted(tuple(r) for r in df.collect()) == [(1, "a\n\nb"), (2, "c")]
+
+    def test_one_line_string_body_is_content(self, spark, stage_root, tmp_path):
+        from rs_streamloader_spark.config import CopySettings
+        from rs_streamloader_spark.sources import to_dataframe
+
+        df = to_dataframe(
+            spark,
+            "1,alpha",
+            fmt="csv",
+            schema="id INT, name STRING",
+            copy_settings=CopySettings(format="CSV"),
+        )
+        assert [tuple(r) for r in df.collect()] == [(1, "alpha")]
+        # a record whose first field is a URL is content too
+        df = to_dataframe(
+            spark,
+            "http://x.com/a,1",
+            fmt="csv",
+            schema="url STRING, n INT",
+            copy_settings=CopySettings(format="CSV"),
+        )
+        assert [tuple(r) for r in df.collect()] == [("http://x.com/a", 1)]
+        df = to_dataframe(spark, '{"id": 3}', schema="id BIGINT")
+        assert [r.id for r in df.collect()] == [3]
+        # an existing path, bare or with a scheme, is still read as one
+        p = tmp_path / "body.csv"
+        p.write_text("5,eps\n")
+        for body in (str(p), f"file://{p}"):
+            df = to_dataframe(
+                spark,
+                body,
+                fmt="csv",
+                schema="id INT, name STRING",
+                copy_settings=CopySettings(format="CSV"),
+            )
+            assert [tuple(r) for r in df.collect()] == [(5, "eps")]
+        # a bare path that does not exist is content, and not JSON
+        with pytest.raises(ValueError, match="neither JSONL text nor an existing path"):
+            to_dataframe(spark, str(tmp_path / "missing.json"))
+        # a missing path with a scheme and no delimiter fails as a path
+        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+            to_dataframe(
+                spark,
+                f"file://{tmp_path}/missing.csv",
+                fmt="csv",
+                schema="id INT, name STRING",
+            ).collect()
+
     def test_single_dict_body_is_one_record(self, spark, stage_root):
         from rs_streamloader_spark.sources import to_dataframe
 

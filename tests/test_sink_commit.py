@@ -3,7 +3,10 @@ atomicity, idempotent batch replay, and staging schema round-trip."""
 
 from __future__ import annotations
 
-from rs_streamloader_spark.sinks.native import NativeTableSink
+import pytest
+from pyspark.sql import functions as F
+
+from rs_streamloader_spark.sinks.native import BUCKET_COL, NativeTableSink
 
 
 def test_insert_batch_replay_is_idempotent(spark, tmp_path):
@@ -33,9 +36,12 @@ def test_two_committed_versions_newer_wins(spark, tmp_path):
     sink.trunc_insert(spark.createDataFrame([(1,)], "id INT"))
     v1 = sink.current_path
     # simulate a crash after commit of v2 but before retiring v1:
-    # write v2 out-of-band with a committed marker
+    # write v2 out-of-band, in the table's one-bucket layout, with a
+    # committed marker
     df2 = spark.createDataFrame([(10,), (11,)], "id INT")
-    df2.write.parquet(str(root / "v_2_cafecafe"))
+    df2.withColumn(BUCKET_COL, F.lit(0)).write.partitionBy(BUCKET_COL).parquet(
+        str(root / "v_2_cafecafe")
+    )
     assert sink.current_path.endswith("v_2_cafecafe")
     assert sink.read().count() == 2
     # the next real commit retires both old dirs
@@ -48,28 +54,85 @@ def test_two_committed_versions_newer_wins(spark, tmp_path):
 
 
 def test_crashed_append_subdir_is_invisible(spark, tmp_path):
-    """A crashed insert leaves a subdir without _SUCCESS — readers
-    must not see its files."""
+    """A crashed insert leaves an additive dir without _SUCCESS —
+    readers must not see its files."""
+    import os
+    import shutil
+
     root = tmp_path / "t"
     sink = NativeTableSink(spark, str(root))
     sink.insert(spark.createDataFrame([(1,)], "id INT"))
-    vdir = sink.current_path.replace("file:", "")
-    import os
-
-    crashed = os.path.join(vdir, "ins_deadbeef")
-    os.makedirs(crashed)
+    bucket = os.path.join(sink.current_path.replace("file:", ""), f"{BUCKET_COL}=0")
+    crashed = root / "a_2_deadbeef" / f"{BUCKET_COL}=0"
+    crashed.mkdir(parents=True)
     # steal a real parquet file so it WOULD parse if read
-    committed_sub = next(
-        d for d in os.listdir(vdir) if d.startswith("ins_") and d != "ins_deadbeef"
-    )
-    src_file = next(
-        f for f in os.listdir(os.path.join(vdir, committed_sub))
-        if f.endswith(".parquet")
-    )
-    import shutil
+    src_file = next(f for f in os.listdir(bucket) if f.endswith(".parquet"))
+    shutil.copy(os.path.join(bucket, src_file), crashed)
+    assert sink.read().count() == 1  # crashed additive dir ignored
+    with sink.snapshot() as pin:
+        assert pin.read().count() == 1
 
-    shutil.copy(os.path.join(vdir, committed_sub, src_file), crashed)
-    assert sink.read().count() == 1  # crashed subdir ignored
+
+def test_version_read_unchanged_by_later_insert(spark, tmp_path):
+    """Every insert commits a new version, so a time-travel read of an
+    older version never sees rows appended after it."""
+    sink = NativeTableSink(spark, str(tmp_path / "t"))
+    sink.trunc_insert(spark.createDataFrame([(i,) for i in range(3)], "id INT"))
+    assert sink.read(version=1).count() == 3
+    sink.insert(spark.createDataFrame([(10,), (11,)], "id INT"))
+    assert sink.read(version=1).count() == 3
+    assert sink.read().count() == 5
+    sink.insert_batch(spark.createDataFrame([(20,)], "id INT"), 0)
+    assert sink.read(version=2).count() == 5
+    assert sink.read().count() == 6
+
+
+def test_second_sink_instance_never_narrows_the_spec(spark, tmp_path):
+    """Two sink instances on one root: a commit through the instance
+    that has not seen the other's wider write still keeps its column,
+    and a replayed batch id stays skipped."""
+    root = str(tmp_path / "t")
+    a = NativeTableSink(spark, root)
+    a.insert(spark.createDataFrame([(1, "x")], "id INT, x STRING"))
+    b = NativeTableSink(spark, root)
+    b.insert_batch(spark.createDataFrame([(2, "y")], "id INT, y STRING"), 5)
+    a.insert(spark.createDataFrame([(3, "x")], "id INT, x STRING"))
+    a.insert_batch(spark.createDataFrame([(2, "y")], "id INT, y STRING"), 5)
+    fresh = NativeTableSink(spark, root)
+    assert set(fresh.read().columns) == {"id", "x", "y"}
+    assert sorted(r.id for r in fresh.read().collect()) == [1, 2, 3]
+    # reads through either instance see the other's column
+    assert set(b.read().columns) == {"id", "x", "y"}
+    c = NativeTableSink(spark, root)
+    b.insert(spark.createDataFrame([(4, 1.5)], "id INT, z DOUBLE"))
+    assert set(a.read().columns) == set(c.read().columns) == {"id", "x", "y", "z"}
+    with c.snapshot() as pin:
+        assert set(pin.read().columns) == {"id", "x", "y", "z"}
+
+
+def test_crash_before_the_first_spec_update_still_opens(spark, tmp_path, monkeypatch):
+    """The spec lands before a root's first commit: a crash between
+    that commit and the spec update after it leaves a table that
+    reopens, reads its rows and still skips the replayed batch."""
+    root = str(tmp_path / "t")
+    saves = []
+    real_save = NativeTableSink._save_spec
+
+    def crash_on_second_save(self, schema):
+        saves.append(schema)
+        if len(saves) == 2:
+            raise RuntimeError("crash after the first commit")
+        real_save(self, schema)
+
+    monkeypatch.setattr(NativeTableSink, "_save_spec", crash_on_second_save)
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id INT, v STRING")
+    with pytest.raises(RuntimeError, match="crash"):
+        NativeTableSink(spark, root).insert_batch(df, 0)
+    monkeypatch.setattr(NativeTableSink, "_save_spec", real_save)
+    reopened = NativeTableSink(spark, root)
+    assert sorted(r.id for r in reopened.read().collect()) == [1, 2]
+    reopened.insert_batch(df, 0)  # replay after the crash
+    assert NativeTableSink(spark, root).read().count() == 2
 
 
 def test_schema_drift_append_and_upsert_null_fill(spark, tmp_path):

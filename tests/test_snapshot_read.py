@@ -173,10 +173,9 @@ def test_renewed_old_pin_defers_vacuum_unrenewed_is_swept(
 
 def test_bucketed_missing_version_read_raises(spark, bucketed):
     """ADVICE r14 #3: a version>=1 read that resolves NO committed
-    version must fail loudly on the bucketed path (it used to surface
-    as a silent empty DataFrame via the spec-schema fallback), exactly
-    like the unbucketed branch — a pin invalidated by pruning is an
-    error, not an empty table."""
+    version must fail loudly (it used to surface as a silent empty
+    DataFrame via the spec-schema fallback) — a pin invalidated by
+    pruning is an error, not an empty table."""
     sink = bucketed
     for tag in ("a", "b"):
         sink.upsert(
@@ -194,10 +193,9 @@ def test_bucketed_missing_version_read_raises(spark, bucketed):
 
 
 def test_pinned_read_isolated_from_unbucketed_insert(spark, tmp_path):
-    """ADVICE r14 #2: unbucketed insert() lands new subdirs inside
-    the LIVE version dir without bumping its number; the pin's frozen
-    path set keeps pin.read() at the committed pre-insert state while
-    a live read sees the appended rows."""
+    """ADVICE r14 #2: an insert() on a default sink after the pin
+    leaves pin.read() at the committed pre-insert state while a live
+    read sees the appended rows."""
     sink = NativeTableSink(spark, str(tmp_path / "u"))
     sink.trunc_insert(
         spark.range(0, 10).select("id", F.lit("a").alias("val"))

@@ -18,18 +18,26 @@ functionally (tests/test_bucketed_sink.py) and measured at bench scale
       the REPLACE delta actually touched;
     - drive one Loader.insert round (ADDITIVE delta — O(batch) by
       construction) with 50 brand-new keys;
-    - do the same seed + one upsert against an UNBUCKETED sink — the
-      whole-table-rewrite contrast that shows what the bucketed layout
-      is buying.
+    - do the same seed + one upsert against a default (one-bucket)
+      sink — the whole-table-rewrite contrast that shows what the
+      bucket count is buying (the ``one_bucket`` section).
+
+``--skew`` measures the hot-bucket case instead: at the largest scale
+given in ``--ks`` whose source exists, it seeds the bucketed table and
+drives SKEW_ROUNDS upserts of a SKEW_KEYS-key batch whose keys are
+SKEW_HOT_SHARE in bucket 0, recording each round's seconds, Spark jobs
+and the files the delta wrote into the hot bucket.
 
 Expected shape (and what the artifact records): bucketed upsert time is
 governed by min(batch_keys, num_buckets) x bucket_size — constant once
-buckets outnumber batch keys — while the flat upsert grows ~linearly
-with the table, and the job count per upsert does not grow at all.
+buckets outnumber batch keys — while the one-bucket upsert grows
+~linearly with the table, and the job count per upsert does not grow
+at all.
+
 Usage:
 
     python tools/loader_stress.py [OUT.json] [--ks 1,10] [--work DIR]
-        [--src10 DIR] [--src100 DIR]
+        [--src10 DIR] [--src100 DIR] [--skew]
     python tools/loader_stress.py --reads [OUT.json] [--work DIR]
 
 ``--src10``/``--src100`` name the k=10/k=100 replicas of the base
@@ -41,7 +49,7 @@ READ_DELTAS additive deltas to a 4-, a 16- and a 64-bucket table and,
 after each, builds a pinned read and records the plan-build seconds and
 the Spark jobs the build ran (Spark lists the files of more than 32
 input paths in a job). It prints the JSON and writes it only to an
-OUT.json given on the command line.
+OUT.json given on the command line, as does ``--skew``.
 """
 
 from __future__ import annotations
@@ -172,7 +180,7 @@ def run(spark, base_sf: str, ks=(1, 10, 100)) -> dict:
     from rs_streamloader_spark.sinks.native import NativeTableSink
 
     SRC[1] = base_sf
-    out: dict = {"batch_keys": BATCH_KEYS, "bucketed": {}, "flat": {}}
+    out: dict = {"batch_keys": BATCH_KEYS, "bucketed": {}, "one_bucket": {}}
     for k in ks:
         src = SRC[k]
         if not os.path.isdir(src):
@@ -224,46 +232,103 @@ def run(spark, base_sf: str, ks=(1, 10, 100)) -> dict:
         }
         print(f"[bucketed k={k}] {out['bucketed'][f'k{k}']}", flush=True)
 
-        # ---- unbucketed contrast (whole-table rewrite) ---------------
-        flat_tbl = os.path.join(root, "flat")
-        flat = NativeTableSink(spark, flat_tbl)
+        # ---- one-bucket contrast (whole-table rewrite) --------------
+        one_tbl = os.path.join(root, "one_bucket")
+        one = NativeTableSink(spark, one_tbl)
         t0 = time.perf_counter()
-        _loader(spark, flat, os.path.join(root, "st_fseed"), events).trunc_insert()
+        _loader(spark, one, os.path.join(root, "st_fseed"), events).trunc_insert()
         fseed_s = round(time.perf_counter() - t0, 2)
-        ld = _loader(spark, flat, os.path.join(root, "st_fu"), _batch(events, 1))
+        ld = _loader(spark, one, os.path.join(root, "st_fu"), _batch(events, 1))
         fup_s, fup_jobs = _timed_upsert(spark, ld)
-        fnew = _newest_commit(flat_tbl, "full")
-        out["flat"][f"k{k}"] = {
+        _, fbytes = _touched_buckets(one_tbl)
+        out["one_bucket"][f"k{k}"] = {
             "table_rows": n_rows,
             "seed_s": fseed_s,
             "upsert_s": [fup_s],
             "upsert_jobs": [fup_jobs],
-            "upsert_rewritten_bytes": [_dir_bytes(fnew) if fnew else None],
+            "upsert_rewritten_bytes": [fbytes],
         }
-        print(f"[flat k={k}] {out['flat'][f'k{k}']}", flush=True)
+        print(f"[one_bucket k={k}] {out['one_bucket'][f'k{k}']}", flush=True)
         shutil.rmtree(root, ignore_errors=True)
 
     # headline ratios: table grew 10x between k=10 and k=100 — bucketed
-    # upsert should hold ~flat, the whole-table rewrite should not
+    # upsert should hold ~constant, the whole-table rewrite should not
     try:
         b10 = min(out["bucketed"]["k10"]["upsert_s"])
         b100 = min(out["bucketed"]["k100"]["upsert_s"])
-        f10 = out["flat"]["k10"]["upsert_s"][0]
-        f100 = out["flat"]["k100"]["upsert_s"][0]
+        f10 = out["one_bucket"]["k10"]["upsert_s"][0]
+        f100 = out["one_bucket"]["k100"]["upsert_s"][0]
         out["upsert_time_ratio_k10_to_k100"] = {
             "bucketed": round(b100 / max(b10, 1e-9), 2),
-            "flat": round(f100 / max(f10, 1e-9), 2),
+            "one_bucket": round(f100 / max(f10, 1e-9), 2),
         }
         bb10 = min(out["bucketed"]["k10"]["upsert_rewritten_bytes"])
         bb100 = min(out["bucketed"]["k100"]["upsert_rewritten_bytes"])
-        fb10 = out["flat"]["k10"]["upsert_rewritten_bytes"][0]
-        fb100 = out["flat"]["k100"]["upsert_rewritten_bytes"][0]
+        fb10 = out["one_bucket"]["k10"]["upsert_rewritten_bytes"][0]
+        fb100 = out["one_bucket"]["k100"]["upsert_rewritten_bytes"][0]
         out["upsert_rewritten_bytes_ratio_k10_to_k100"] = {
             "bucketed": round(bb100 / max(bb10, 1), 2),
-            "flat": round(fb100 / max(fb10, 1), 2),
+            "one_bucket": round(fb100 / max(fb10, 1), 2),
         }
     except (KeyError, IndexError, TypeError):
         pass
+    return out
+
+
+SKEW_KEYS = 5000
+SKEW_HOT_SHARE = 0.9
+SKEW_ROUNDS = 5
+
+
+def run_skew(spark, base_sf: str, ks) -> dict:
+    """Hot-bucket upserts at the largest scale in ``ks`` whose source
+    exists: SKEW_HOT_SHARE of a SKEW_KEYS-key batch hashes to bucket 0,
+    the rest spreads over the other buckets. Every round rewrites the
+    same keys with new values, so each delta holds the same rows."""
+    from rs_streamloader_spark.sinks.native import NativeTableSink
+
+    SRC[1] = base_sf
+    k = max(k for k in ks if SRC[k] and os.path.isdir(SRC[k]))
+    events = _events(spark, SRC[k])
+    buckets = BUCKETS[k]
+    bucket = F.pmod(F.hash(F.col("event_id").cast("string")), F.lit(buckets))
+    hot_n = int(SKEW_KEYS * SKEW_HOT_SHARE)
+    keys = (
+        events.where(bucket == 0).orderBy("event_id").limit(hot_n)
+        .unionByName(
+            events.where(bucket != 0).orderBy("event_id").limit(SKEW_KEYS - hot_n)
+        )
+        .cache()
+    )
+    root = os.path.join(WORK, f"skew_k{k}")
+    shutil.rmtree(root, ignore_errors=True)
+    tbl = os.path.join(root, "tbl")
+    sink = NativeTableSink(spark, tbl, num_buckets=buckets, bucket_by="event_id")
+    _loader(spark, sink, os.path.join(root, "st_seed"), events).trunc_insert()
+    out: dict = {
+        "k": k,
+        "num_buckets": buckets,
+        "batch_keys": SKEW_KEYS,
+        "hot_share": SKEW_HOT_SHARE,
+        "upsert_s": [],
+        "upsert_jobs": [],
+        "hot_bucket_files": [],
+    }
+    for r in range(SKEW_ROUNDS):
+        body = keys.withColumn("value", F.col("value") + F.lit(float(r)))
+        ld = _loader(spark, sink, os.path.join(root, f"st_{r}"), body)
+        secs, jobs = _timed_upsert(spark, ld)
+        hot = os.path.join(_newest_commit(tbl, "delta"), "__b=0")
+        out["upsert_s"].append(secs)
+        out["upsert_jobs"].append(jobs)
+        out["hot_bucket_files"].append(
+            sum(1 for f in os.listdir(hot) if f.endswith(".parquet"))
+        )
+    out["table_rows"] = sink.read().count()
+    out["median_s"] = sorted(out["upsert_s"])[SKEW_ROUNDS // 2]
+    keys.unpersist()
+    shutil.rmtree(root, ignore_errors=True)
+    print(f"[skew k={k}] {out}", flush=True)
     return out
 
 
@@ -369,6 +434,10 @@ def main() -> None:
         "--reads", action="store_true",
         help="measure pinned-read plan builds over many deltas instead",
     )
+    ap.add_argument(
+        "--skew", action="store_true",
+        help="measure hot-bucket upserts instead",
+    )
     args = ap.parse_args()
     WORK, SRC[10], SRC[100] = args.work, args.src10, args.src100
     from rs_streamloader_spark.session import get_session
@@ -383,16 +452,22 @@ def main() -> None:
                 json.dump(result, fh, indent=1, sort_keys=True)
                 fh.write("\n")
         return
-    if args.out is None:
+    if args.out is None and not args.skew:
         args.out = os.path.join(_REPO_ROOT, "SCALE_STRESS_r11_loader.json")
     base_sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    result = run(spark, base_sf, tuple(int(k) for k in args.ks.split(",")))
-    if os.path.isdir(SRC[10]):
-        result["batch_size_sweep_k10"] = run_batch_size_sweep(spark, SRC[10])
-    with open(args.out, "w") as fh:
-        json.dump(result, fh, indent=1, sort_keys=True)
-        fh.write("\n")
-    print(f"wrote {args.out}")
+    ks = tuple(int(k) for k in args.ks.split(","))
+    if args.skew:
+        result = run_skew(spark, base_sf, ks)
+        print(json.dumps(result, sort_keys=True))
+    else:
+        result = run(spark, base_sf, ks)
+        if os.path.isdir(SRC[10]):
+            result["batch_size_sweep_k10"] = run_batch_size_sweep(spark, SRC[10])
+    if args.out:
+        with open(args.out, "w") as fh:
+            json.dump(result, fh, indent=1, sort_keys=True)
+            fh.write("\n")
+        print(f"wrote {args.out}")
 
 
 if __name__ == "__main__":

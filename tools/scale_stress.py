@@ -1011,10 +1011,10 @@ def _stress_one(spark, name, fn, runs, base_sf, scaled_sf, k, row) -> None:
 
 
 def main() -> None:
-    from rs_streamloader_spark.session import get_session
+    from rs_streamloader_spark.session import env_int, get_session
 
     cmd = sys.argv[1] if len(sys.argv) > 1 else "run"
-    k = int(os.environ.get("RS_SL_SCALE_K", "10"))
+    k = env_int("RS_SL_SCALE_K", 10, lo=1)
     base_sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     scaled_sf = os.environ.get("RS_SL_SCALED_DIR", "/tmp/rs_sl_sf1")
     spark = get_session(app_name="rs_sl_scale_stress")
