@@ -56,7 +56,8 @@ def shuffle_count(df: DataFrame) -> int:
     text = explain_str(df, "simple")
     return len(
         re.findall(
-            r"\bExchange (?:hashpartitioning|rangepartitioning|SinglePartition)",
+            r"\bExchange (?:hashpartitioning|rangepartitioning|SinglePartition"
+            r"|shufflepartitionidpassthrough)",
             text,
         )
     )

@@ -222,6 +222,29 @@ class TestBucketedLayout:
             ]
             assert len(files) == 1, (b, files)
 
+    def test_full_write_spreads_buckets_over_the_cores(self, spark, sink):
+        """AQE must not coalesce the bucket exchange of a small write
+        into one task: the write's result stage runs in
+        min(buckets, defaultParallelism) tasks, one file per bucket."""
+        sc = spark.sparkContext
+        dag = sc._jsc.sc().dagScheduler()
+        j0 = int(dag.nextJobId())
+        sink.trunc_insert(_rows(spark, range(200)))
+        tracker = sc.statusTracker()
+        stages = [
+            s
+            for j in range(j0, int(dag.nextJobId()))
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        result_stage = tracker.getStageInfo(max(stages))
+        assert result_stage.numTasks == min(N_BUCKETS, sc.defaultParallelism)
+        (full,) = _version_dirs(sink.root)
+        buckets = _bucket_subdirs(sink.root, full)
+        assert len(buckets) == N_BUCKETS
+        for b in buckets:
+            files = os.listdir(os.path.join(sink.root, full, b))
+            assert len([f for f in files if f.endswith(".parquet")]) == 1, files
+
 
 class TestAppendAndReplayContracts:
     """Regression tests for the exactly-once + O(batch) append

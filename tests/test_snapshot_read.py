@@ -243,6 +243,35 @@ def test_snapshot_pin_survives_resolve_race(spark, bucketed, monkeypatch):
         assert {r["val"] for r in snap.read().collect()} == {"b"}
 
 
+def test_snapshot_resolves_over_its_verify_listing(spark, bucketed, monkeypatch):
+    """An unraced pin lists the version dirs twice (resolve, then
+    re-verify after the marker lands) and resolves its paths over the
+    second listing; the writer-locked fallback lists once."""
+    from rs_streamloader_spark.sinks import native
+
+    sink = bucketed
+    sink.upsert(
+        spark.range(0, 20).select("id", F.lit("a").alias("val")), id_field="id"
+    )
+    sink.insert(spark.range(20, 25).select("id", F.lit("b").alias("val")))
+    real = NativeTableSink._committed_versions
+    calls = []
+
+    def counting(self):
+        calls.append(1)
+        return real(self)
+
+    monkeypatch.setattr(NativeTableSink, "_committed_versions", counting)
+    with sink.snapshot() as snap:
+        assert len(calls) == 2 and snap.version == 2
+        assert snap.read().count() == 25
+    calls.clear()
+    monkeypatch.setattr(native, "_PIN_ATTEMPTS", 0)
+    with sink.snapshot() as snap:
+        assert len(calls) == 1 and snap.version == 2
+        assert snap.read().count() == 25
+
+
 def test_incremental_dedup_protocol_shape(spark, tmp_path):
     """The exact read-version-N-while-writing-N+1 shape
     dedup_incremental_minhash runs: decision plan over the pinned
