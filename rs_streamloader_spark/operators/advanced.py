@@ -16,7 +16,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 from rs_streamloader_spark.operators.registry import register
-from rs_streamloader_spark.session import load_tables
+from rs_streamloader_spark.session import load_tables, scratch_dir
 
 RANGE_DAYS = 7
 RANGE_ORDER_MOD = 100  # sample 1/100 orders as range-join probes
@@ -1962,8 +1962,6 @@ def native_store_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame
     (RedshiftLoader.ts:369-384; BEGIN..COMMIT core.ts:7-60) re-expressed
     as snapshot-isolated lake-table reads."""
     import os
-    import shutil
-    import tempfile
 
     from rs_streamloader_spark.loader import Loader
     from rs_streamloader_spark.sinks.native import NativeTableSink
@@ -1977,13 +1975,7 @@ def native_store_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.length("text") + _TT_BUMP).cast("bigint").alias("q"),
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_timetravel",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "timetravel", sf_dir)
     sink = NativeTableSink(
         spark,
         os.path.join(base, "quality_store"),
@@ -2065,8 +2057,6 @@ def native_store_manifest_interop(spark: SparkSession, sf_dir: str) -> DataFrame
     mandatory entries, utils.ts:151-162) pointed at readers instead
     of Redshift."""
     import os
-    import shutil
-    import tempfile
 
     from rs_streamloader_spark.loader import Loader
     from rs_streamloader_spark.sinks.native import (
@@ -2080,13 +2070,7 @@ def native_store_manifest_interop(spark: SparkSession, sf_dir: str) -> DataFrame
     rows = docs.select(
         "doc_id", "source", F.length("text").cast("bigint").alias("q")
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_manifest",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "manifest", sf_dir)
     sink = NativeTableSink(
         spark,
         os.path.join(base, "quality_store"),
@@ -2181,8 +2165,6 @@ def native_store_manifest_pruning(
     COPY list, utils.ts:151-162 — no statistics; this is the novel
     lake-layer extension on top of it)."""
     import os
-    import shutil
-    import tempfile
 
     from rs_streamloader_spark.sinks.native import (
         load_manifest,
@@ -2207,13 +2189,7 @@ def native_store_manifest_pruning(
     w = max(16, (max_id + 1) // 32)
     hi = max_id // 4
     docs = base_docs.withColumn("band", F.expr(f"doc_id DIV {w}"))
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_zonemap",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "zonemap", sf_dir)
     d = os.path.join(base, "ranged")
     # one file per band: repartition by VALUE co-locates each band in
     # exactly one task; partitionBy then writes it as that dir's one
@@ -2289,8 +2265,6 @@ def native_store_incremental_agg(
     into a target by id (RedshiftLoader.ts:369-384); this extends the
     same merge discipline from row replacement to aggregate folding."""
     import os
-    import shutil
-    import tempfile
 
     from rs_streamloader_spark.sinks.native import NativeTableSink
 
@@ -2314,13 +2288,7 @@ def native_store_incremental_agg(
             ).alias("slc"),
         )
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_ivm",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "ivm", sf_dir)
     sink = NativeTableSink(
         spark,
         os.path.join(base, "agg_store"),

@@ -2938,23 +2938,16 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     caller-side checkpointing — the sink-level contract is pinned by
     tests/test_snapshot_read.py."""
     import os
-    import shutil
-    import tempfile
 
     from rs_streamloader_spark.loader import Loader
+    from rs_streamloader_spark.session import scratch_dir
     from rs_streamloader_spark.sinks.native import NativeTableSink
 
     sig = _minhash_sig_cached(spark, sf_dir)
     store_sigs = sig.where(F.col("doc_id") % 2 == 0)
     inc_sigs = sig.where(F.col("doc_id") % 2 == 1)
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_incdedup",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "incdedup", sf_dir)
     sink = NativeTableSink(
         spark,
         os.path.join(base, "sig_store"),

@@ -1300,22 +1300,15 @@ def jsonl_quarantine_loadflow(spark: SparkSession, sf_dir: str) -> DataFrame:
     loader's bucketed O(batch) path; the rollup reads back fixed-width
     columns only."""
     import os
-    import shutil
-    import tempfile
 
     from rs_streamloader_spark.loader import Loader
+    from rs_streamloader_spark.session import scratch_dir
     from rs_streamloader_spark.sinks.native import NativeTableSink
 
     parsed = _jsonl_parsed(spark, sf_dir).select(
         "doc_id", "source", "is_malformed"
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_quarantine",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "quarantine", sf_dir)
     main = NativeTableSink(
         spark, os.path.join(base, "main"), num_buckets=8, bucket_by="doc_id"
     )

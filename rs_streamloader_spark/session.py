@@ -224,6 +224,27 @@ def stage_cached(spark: SparkSession, sf_dir: str, key: str, build):
         return df
 
 
+def scratch_dir(spark: SparkSession, name: str, sf_dir: str) -> str:
+    """``$TMPDIR/rs_sl/<applicationId>/<name>/<basename(sf_dir)>``,
+    freshly emptied: the one scratch location of the operators and
+    replays that land tables, stages or checkpoints of their own. The
+    application id keeps concurrent sessions apart; ``name`` must be
+    unique per caller, because emptying a dir deletes the files that
+    an earlier query's lazy read-back still points at."""
+    import shutil
+    import tempfile
+
+    base = os.path.join(
+        tempfile.gettempdir(),
+        "rs_sl",
+        spark.sparkContext.applicationId,
+        name,
+        os.path.basename(os.path.normpath(sf_dir)),
+    )
+    shutil.rmtree(base, ignore_errors=True)
+    return base
+
+
 # external memo registries cleared alongside the stage cache: families
 # whose shared unit is not one cacheable DataFrame (e.g. the unigram
 # trainer's pair of checkpointed tables) register their dict here so

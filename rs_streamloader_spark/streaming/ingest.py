@@ -6,10 +6,10 @@ The reference accepts new bodies while earlier uploads are in flight
 and closes intake once the load starts. Structured Streaming is the
 Spark-native generalization: a file-source stream picks up new objects
 per micro-batch, and ``foreachBatch`` applies one of the three load
-modes per batch with a batchId-keyed staging prefix — re-processing a
-batch after failure overwrites the same prefix instead of duplicating
-it (idempotent sink ≈ the manifest's all-or-nothing contract,
-RedshiftLoader.ts:303-309).
+modes per batch — a batch re-processed after a failure lands once, not
+twice: an insert skips a batchId the sink already applied, and an
+upsert is idempotent by key (≈ the manifest's all-or-nothing
+contract, RedshiftLoader.ts:303-309).
 
 Scale: per-trigger intake is bounded with ``maxFilesPerTrigger``
 (≈ the reference's backpressure, lib/utils.ts:41-63); state is the
@@ -65,32 +65,27 @@ class StreamingLoader:
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self.batches_seen.append(batch_id)
         if self.load_mode == "insert":
-            # batchId-keyed overwrite: a replayed batch overwrites its
-            # own subdir instead of appending duplicates
+            # batchId-keyed: the sink records the highest applied id
+            # (and tags each delta with its id), so a replayed batch
+            # is skipped instead of appending duplicates
             self.sink.insert_batch(batch_df, batch_id)
         else:
             # dedupe='last' keeps one row per key within the batch —
             # the sane default for streams (SURVEY.md §2 M3 discussion)
             self.sink.upsert(batch_df, id_field=self.id_field, dedupe="last")
 
-    def run_available(self) -> None:
-        """Process everything currently in the source dir, then stop
-        (Trigger.AvailableNow) — the batch-parity mode used in tests."""
-        q = (
-            self._stream()
-            .writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def start(self, processing_time: str = "10 seconds"):
-        """Continuous mode: returns the StreamingQuery handle."""
+    def _writer(self):
         return (
             self._stream()
             .writeStream.foreachBatch(self._apply_batch)
             .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
         )
+
+    def run_available(self) -> None:
+        """Process everything currently in the source dir, then stop
+        (Trigger.AvailableNow) — the batch-parity mode used in tests."""
+        self._writer().trigger(availableNow=True).start().awaitTermination()
+
+    def start(self, processing_time: str = "10 seconds"):
+        """Continuous mode: returns the StreamingQuery handle."""
+        return self._writer().trigger(processingTime=processing_time).start()

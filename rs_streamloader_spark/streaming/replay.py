@@ -20,21 +20,25 @@ past every real row, so the availableNow run's trailing no-data batch
 flushes ALL real output; the sentinel's own state stays unemitted
 (the watermark never passes it) and is filtered by its negative key.
 
-Scratch I/O lives under ``$TMPDIR/rs_sl_replay/<appId>/…`` and is
-rewritten per run; volume is one copy of the events table per query.
+Scratch I/O lives under ``$TMPDIR/rs_sl/<appId>/replay_<tag>/<sf>``
+(``session.scratch_dir``) and is rewritten per run; volume is one copy
+of the events table per query.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rs_streamloader_spark.operators.registry import register
-from rs_streamloader_spark.session import _read_parquet_nanos_safe, env_int
+from rs_streamloader_spark.session import (
+    _read_parquet_nanos_safe,
+    env_int,
+    scratch_dir,
+)
 from rs_streamloader_spark.streaming.joins import attribution_join_outer
 from rs_streamloader_spark.streaming.stateful import SESSION_GAP_S, sessionize_stateful
 from rs_streamloader_spark.streaming.windows import streaming_dedup
@@ -135,14 +139,7 @@ def _replay(
     ``max_files_per_trigger`` rate-limits the file source so a replay
     exercises REAL multi-batch incremental state instead of one big
     batch."""
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_replay",
-        spark.sparkContext.applicationId,
-        tag,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, f"replay_{tag}", sf_dir)
     streams = {}
     for name, df in inputs.items():
         path = os.path.join(base, f"in_{name}")
@@ -156,21 +153,20 @@ def _replay(
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
         streams[name] = reader.parquet(path)
     out = os.path.join(base, "out")
+    land_mode = "overwrite" if output_mode == "complete" else "append"
     # a stateful streaming query instantiates one state-store partition
     # per shuffle partition PER stateful operator PER micro-batch — at
     # the session default (32 here, 200 on a real cluster) a bounded
     # replay pays ~32 store open/commit cycles × batches for kilobytes
     # of state. Derive the width from the staged input volume
     # (_replay_width: input-size-adaptive, 1 at kilobyte scale, the
-    # session width at deployment scale); the query captures it at
-    # start and the session value is restored immediately.
+    # session width at deployment scale).
     _run_available_now(
         spark,
         build(streams),
-        out,
         os.path.join(base, "ckpt"),
-        shuffle_partitions=shuffle_partitions
-        or _replay_width(spark, inputs.values()),
+        lambda bdf, _bid: bdf.write.mode(land_mode).parquet(out),
+        shuffle_partitions or _replay_width(spark, inputs.values()),
         output_mode=output_mode,
     )
     return spark.read.parquet(out)
@@ -179,26 +175,24 @@ def _replay(
 def _run_available_now(
     spark: SparkSession,
     stream_df: DataFrame,
-    out: str,
     ckpt: str,
-    shuffle_partitions: int | None = None,
+    land,
+    shuffle_partitions: int,
     output_mode: str = "append",
 ) -> None:
-    """Shared availableNow runner: pin the replay state-store width,
-    land each micro-batch to parquet (overwrite for complete mode),
-    restore the session width — ONE copy of the harness boilerplate
-    for every replay wrapper."""
+    """The one availableNow runner of every replay: run ``stream_df``
+    to the end of its input with ``land(bdf, batch_id)`` as the
+    foreachBatch body, at ``shuffle_partitions`` wide. The query
+    captures the width at start; the session's own width is restored
+    when the query ends, also when a batch fails (that failure reaches
+    the caller). On a stateless file scan (the sliced replays)
+    ``output_mode`` changes nothing: every mode runs one micro-batch
+    per staged slice (see ``_stage_sliced``)."""
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(shuffle_partitions or REPLAY_SHUFFLE_PARTITIONS),
-    )
-    land_mode = "overwrite" if output_mode == "complete" else "append"
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
         q = (
-            stream_df.writeStream.foreachBatch(
-                lambda bdf, _bid: bdf.write.mode(land_mode).parquet(out)
-            )
+            stream_df.writeStream.foreachBatch(land)
             .outputMode(output_mode)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -215,15 +209,19 @@ def _stage_sliced(
     slice_values,
     in_path: str,
     flatten: bool = False,
-) -> None:
-    """Stage a replay's sliced input in ONE write (r15 opt): the
-    repartition-by-value puts each slice in one task and partitionBy
-    lands it as that dir's single file, replacing the per-slice
-    filter+coalesce(1) append loop that re-scanned (and for the
-    ntile-sliced replays re-sorted) the input once per slice. Ascending
-    per-slice mtimes then fabricate the oldest-first arrival order
-    maxFilesPerTrigger=1 replays depend on (FileStreamSource orders by
-    mtime with no tiebreak — tests/test_multibatch_replay.py).
+) -> DataFrame:
+    """Stage a replay's sliced input and return the stream that reads
+    it ONE SLICE PER MICRO-BATCH: each slice is one file, the files'
+    mtimes ascend in the order ``slice_values`` gives (FileStreamSource
+    orders by mtime with no tiebreak — tests/test_multibatch_replay.py),
+    and the stream reads them under ``maxFilesPerTrigger=1``. The two
+    halves are one contract, so they live in one function.
+
+    One write stages every slice (r15 opt): the repartition-by-value
+    puts each slice in one task and partitionBy lands it as that dir's
+    single file, replacing the per-slice filter+coalesce(1) append loop
+    that re-scanned (and for the ntile-sliced replays re-sorted) the
+    input once per slice.
 
     ``flatten=True`` moves the staged files out of their partition
     dirs into ``in_path`` root: a partitioned layout APPENDS the
@@ -231,12 +229,13 @@ def _stage_sliced(
     omits it (measured), so replays whose stream schema must not carry
     the slice column get root-level files holding exactly the
     partitionBy-stripped data columns — the same bytes-on-disk shape
-    the old drop-then-write loop produced."""
+    the old drop-then-write loop produced. The stream's schema is
+    ``df``'s, minus the slice column when flattened."""
     import time as _time
 
     df.repartition(slice_col).write.partitionBy(slice_col).parquet(in_path)
-    base_mtime = _time.time() - len(list(slice_values)) - 60
-    for pos, v in enumerate(sorted(slice_values), start=1):
+    base_mtime = _time.time() - len(slice_values) - 60
+    for pos, v in enumerate(slice_values, start=1):
         slc_dir = os.path.join(in_path, f"{slice_col}={v}")
         if not os.path.isdir(slc_dir):
             # a slice value with zero rows gets no partition dir; the
@@ -244,24 +243,27 @@ def _stage_sliced(
             # skip it the same way (ADVICE r15: modulo-sliced replays
             # can hit this at tiny scale)
             continue
-        # only the visible data files: Hadoop's hidden .crc siblings
+        # only the visible data file: Hadoop's hidden .crc siblings
         # must stay hidden (a rename dropping the leading dot would
-        # surface them to the file source as unreadable inputs)
-        names = sorted(
+        # surface them to the file source as unreadable inputs). The
+        # unpack fails loudly if a slice ever lands as two files,
+        # which would make it two micro-batches.
+        (name,) = [
             n for n in os.listdir(slc_dir) if not n.startswith((".", "_"))
-        )
+        ]
+        full = os.path.join(slc_dir, name)
         if flatten:
-            moved = []
-            for name in names:
-                dest = os.path.join(in_path, f"s{pos:04d}_{name}")
-                os.rename(os.path.join(slc_dir, name), dest)
-                moved.append(dest)
+            dest = os.path.join(in_path, f"s{pos:04d}_{name}")
+            os.rename(full, dest)
             shutil.rmtree(slc_dir)
-            targets = moved
-        else:
-            targets = [os.path.join(slc_dir, n) for n in names]
-        for full in targets:
-            os.utime(full, (base_mtime + pos, base_mtime + pos))
+            full = dest
+        os.utime(full, (base_mtime + pos, base_mtime + pos))
+    schema = df.drop(slice_col).schema if flatten else df.schema
+    return (
+        df.sparkSession.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_path)
+    )
 
 
 _DEDUP_ORACLE = """
@@ -682,15 +684,7 @@ def stream_upsert_loader_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rs_streamloader_spark.sinks.native import NativeTableSink
 
     ev = _events(spark, sf_dir).select("user_id", "ts", "event_id", "value")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_replay",
-        spark.sparkContext.applicationId,
-        "cdc_upsert",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    in_path = os.path.join(base, "in")
+    base = scratch_dir(spark, "replay_cdc_upsert", sf_dir)
     # contiguous (ts, event_id) slices, staged oldest-first with
     # explicitly increasing mtimes (FileStreamSource orders by mtime
     # with no tiebreak — see tests/test_multibatch_replay.py).
@@ -706,17 +700,16 @@ def stream_upsert_loader_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__slice",
         F.ntile(_CDC_SLICES).over(W.orderBy("ts", "event_id")),
     )
-    _stage_sliced(
-        sliced, "__slice", range(1, _CDC_SLICES + 1), in_path, flatten=True
+    stream = _stage_sliced(
+        sliced,
+        "__slice",
+        range(1, _CDC_SLICES + 1),
+        os.path.join(base, "in"),
+        flatten=True,
     )
     table_root = os.path.join(base, "table")
     sink = NativeTableSink(
         spark, table_root, num_buckets=_CDC_BUCKETS, bucket_by="user_id"
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
     )
 
     def land(bdf: DataFrame, _bid: int) -> None:
@@ -730,21 +723,13 @@ def stream_upsert_loader_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             dedupe="last",
         )
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_replay_width(spark, [ev]))
+    _run_available_now(
+        spark,
+        stream,
+        os.path.join(base, "ckpt"),
+        land,
+        _replay_width(spark, [ev]),
     )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(land)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     # wall-clock round-trip back to NTZ (exact: Jan–Feb data, no DST
     # transition — same contract as the other replay wrappers)
     return sink.read().select(
@@ -951,8 +936,6 @@ def stream_late_data_audit_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     assignment pins ties by (ts, event_id); admitted-set membership
     is exact timestamp arithmetic; the one float column follows the
     tumbling replay's ROUND(SUM, 2) convention."""
-    import time as _time
-
     from pyspark.sql.window import Window as W
 
     from rs_streamloader_spark.streaming.windows import tumbling_window_agg
@@ -960,16 +943,7 @@ def stream_late_data_audit_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     ev = _events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    sentinel_ts = _sentinel_ts(ev)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_replay",
-        spark.sparkContext.applicationId,
-        "late_audit",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir = os.path.join(base, "in")
+    base = scratch_dir(spark, "replay_late_audit", sf_dir)
     # HARNESS-ONLY single-partition sort (see stream_upsert_loader_replay):
     # the unpartitioned ntile fabricates time-contiguous arrival slices,
     # which the watermark-protocol oracle depends on — the measured
@@ -977,53 +951,27 @@ def stream_late_data_audit_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     sliced = ev.withColumn(
         "__slice", F.ntile(_LATE_N_SLICES).over(W.orderBy("ts", "event_id"))
     )
-    # ONE partitioned write stages every slice (the per-slice filter
-    # loop re-ran the global ntile sort six times); each slice then
-    # renames to a single file whose mtime encodes ARRIVAL order (the
-    # file source orders by mtime); the sentinel file is newest and
-    # flushes every surviving window at the end
-    base_mtime = _time.time() - _LATE_N_SLICES - 60
-    staged = os.path.join(base, "staged")
-    sliced.repartition(1, "__slice").write.partitionBy("__slice").parquet(staged)
-    for pos, slice_id in enumerate(_LATE_ARRIVAL_ORDER, start=1):
-        part_dir = os.path.join(staged, f"__slice={slice_id}")
-        (part_file,) = [
-            n for n in os.listdir(part_dir) if n.endswith(".parquet")
-        ]
-        dest = os.path.join(in_dir, f"f{pos}.parquet")
-        os.makedirs(in_dir, exist_ok=True)
-        os.rename(os.path.join(part_dir, part_file), dest)
-        os.utime(dest, (base_mtime + pos, base_mtime + pos))
-    shutil.rmtree(staged, ignore_errors=True)
+    # the sentinel is one more slice, staged after the permuted six:
+    # it arrives last and flushes every surviving window at the end
+    sentinel_slice = _LATE_N_SLICES + 1
     sentinel = spark.createDataFrame(
-        [(-1, sentinel_ts, -1, "__sentinel", 0.0)], ev.schema
+        [(-1, _sentinel_ts(ev), -1, "__sentinel", 0.0, sentinel_slice)],
+        sliced.schema,
     )
-    sp = os.path.join(base, "sent")
-    sentinel.coalesce(1).write.parquet(sp)
-    for name in os.listdir(sp):
-        if name.endswith(".parquet"):
-            os.rename(
-                os.path.join(sp, name),
-                os.path.join(in_dir, f"f{_LATE_N_SLICES + 1}.parquet"),
-            )
-    shutil.rmtree(sp, ignore_errors=True)
-    os.utime(
-        os.path.join(in_dir, f"f{_LATE_N_SLICES + 1}.parquet"),
-        (base_mtime + _LATE_N_SLICES + 1, base_mtime + _LATE_N_SLICES + 1),
+    stream = _stage_sliced(
+        sliced.unionByName(sentinel),
+        "__slice",
+        _LATE_ARRIVAL_ORDER + (sentinel_slice,),
+        os.path.join(base, "in"),
+        flatten=True,
     )
-
     out = os.path.join(base, "out")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
     _run_available_now(
         spark,
         tumbling_window_agg(stream, watermark=_LATE_WATERMARK),
-        out,
         os.path.join(base, "ckpt"),
-        shuffle_partitions=_replay_width(spark, [ev]),
+        lambda bdf, _bid: bdf.write.mode("append").parquet(out),
+        _replay_width(spark, [ev]),
     )
     landed = spark.read.parquet(out)
     return landed.filter(F.col("event_type") != "__sentinel").select(
@@ -1245,14 +1193,7 @@ def stream_incremental_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFra
     docs = load_tables(spark, sf_dir, "documents")["documents"].select(
         "doc_id", "text"
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_replay",
-        spark.sparkContext.applicationId,
-        "inc_dedup",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "replay_inc_dedup", sf_dir)
     sink = NativeTableSink(
         spark, os.path.join(base, "store"), num_buckets=16, bucket_by="doc_id"
     )
@@ -1280,19 +1221,15 @@ def stream_incremental_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFra
 
     # stage the incoming stream: one file per slice, oldest-first
     # mtimes, one write (_stage_sliced)
-    in_path = os.path.join(base, "in")
     inc = docs.where(F.col("doc_id") % 2 == 1).withColumn(
         "slc",
         F.expr(f"CAST((doc_id div 2) % {_INC_DD_SLICES} AS INT)"),
     )
-    _stage_sliced(inc, "slc", range(_INC_DD_SLICES), in_path)
+    stream = _stage_sliced(
+        inc, "slc", range(_INC_DD_SLICES), os.path.join(base, "in")
+    )
 
     out_dir = os.path.join(base, "decisions")
-    stream = (
-        spark.readStream.schema(inc.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
-    )
 
     def land_batch(bdf: DataFrame, bid: int) -> None:
         # (a) this batch's signatures from raw text — O(batch) work
@@ -1308,21 +1245,13 @@ def stream_incremental_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFra
         # (c) the handoff: this batch joins the store
         land_sigs(sig_b, f"stage_b{bid}")
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_replay_width(spark, [inc]))
+    _run_available_now(
+        spark,
+        stream,
+        os.path.join(base, "ckpt"),
+        land_batch,
+        _replay_width(spark, [inc]),
     )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(land_batch)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return spark.read.parquet(out_dir).select(
         "doc_id", "slc", "matched_doc", "n_match", "est_jaccard", "is_dup"
     )
@@ -1388,26 +1317,15 @@ def stream_multimodal_screen_replay(spark: SparkSession, sf_dir: str) -> DataFra
             "slc", F.expr(f"CAST(doc_id % {_MM_SCREEN_SLICES} AS INT)")
         )
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_replay",
-        spark.sparkContext.applicationId,
-        "mm_screen",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "replay_mm_screen", sf_dir)
 
     # one file per slice, oldest-first mtimes, one write — the
     # incremental-dedup staging shape (_stage_sliced)
-    in_path = os.path.join(base, "in")
-    _stage_sliced(docs, "slc", range(_MM_SCREEN_SLICES), in_path)
+    stream = _stage_sliced(
+        docs, "slc", range(_MM_SCREEN_SLICES), os.path.join(base, "in")
+    )
 
     out_dir = os.path.join(base, "verdicts")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
-    )
 
     def land_batch(bdf: DataFrame, _bid: int) -> None:
         scr = bdf.select("doc_id", "text").mapInPandas(
@@ -1425,21 +1343,13 @@ def stream_multimodal_screen_replay(spark: SparkSession, sf_dir: str) -> DataFra
             "batch_kept", "batch_total",
         ).write.mode("append").parquet(out_dir)
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_replay_width(spark, [docs]))
+    _run_available_now(
+        spark,
+        stream,
+        os.path.join(base, "ckpt"),
+        land_batch,
+        _replay_width(spark, [docs]),
     )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(land_batch)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return spark.read.parquet(out_dir).select(
         "doc_id", "slc", "mime", "metric", "keep", "batch_kept", "batch_total"
     )
@@ -1630,15 +1540,7 @@ def stream_maintenance_pin_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     from rs_streamloader_spark.sinks.native import NativeTableSink
 
     ev = _events(spark, sf_dir).select("user_id", "ts", "event_id")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_replay",
-        spark.sparkContext.applicationId,
-        "maint_pin",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    in_path = os.path.join(base, "in")
+    base = scratch_dir(spark, "replay_maint_pin", sf_dir)
     # harness-only single-partition sort fabricating arrival order
     # (same contract as stream_upsert_loader_replay — the measured
     # operator is the maintenance protocol, which never sees it).
@@ -1648,18 +1550,17 @@ def stream_maintenance_pin_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         "__slice",
         F.ntile(_MAINT_SLICES).over(W.orderBy("ts", "event_id")),
     )
-    _stage_sliced(
-        sliced, "__slice", range(1, _MAINT_SLICES + 1), in_path, flatten=True
+    stream = _stage_sliced(
+        sliced,
+        "__slice",
+        range(1, _MAINT_SLICES + 1),
+        os.path.join(base, "in"),
+        flatten=True,
     )
 
     table_root = os.path.join(base, "table")
     sink = NativeTableSink(
         spark, table_root, num_buckets=_MAINT_BUCKETS, bucket_by="user_id"
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
     )
 
     state: dict = {"pin": None, "sig": None}
@@ -1715,21 +1616,13 @@ def stream_maintenance_pin_replay(spark: SparkSession, sf_dir: str) -> DataFrame
             (1, lu, state["sig"][0], True, sink.vacuum() == 0)
         )
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_replay_width(spark, [ev]))
+    _run_available_now(
+        spark,
+        stream,
+        os.path.join(base, "ckpt"),
+        land,
+        _replay_width(spark, [ev]),
     )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(land)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
     # release the lease: the deferred garbage must now actually go
     state["pin"].release()
@@ -1808,23 +1701,11 @@ def stream_format_router_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "slc", F.expr(f"CAST(doc_id % {_ROUTER_SLICES} AS INT)")
         )
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_replay",
-        spark.sparkContext.applicationId,
-        "fmt_router",
-        os.path.basename(os.path.normpath(sf_dir)),
+    base = scratch_dir(spark, "replay_fmt_router", sf_dir)
+    stream = _stage_sliced(
+        docs, "slc", range(_ROUTER_SLICES), os.path.join(base, "in")
     )
-    shutil.rmtree(base, ignore_errors=True)
-    in_path = os.path.join(base, "in")
-    _stage_sliced(docs, "slc", range(_ROUTER_SLICES), in_path)
-
     sink = NativeTableSink(spark, os.path.join(base, "tallies"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
-    )
 
     def land_batch(bdf: DataFrame, bid: int) -> None:
         routed = bdf.select("doc_id", "text").mapInPandas(
@@ -1852,21 +1733,13 @@ def stream_format_router_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink.insert_batch(tally, bid)
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_replay_width(spark, [docs]))
+    _run_available_now(
+        spark,
+        stream,
+        os.path.join(base, "ckpt"),
+        land_batch,
+        _replay_width(spark, [docs]),
     )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(land_batch)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return sink.read().select(
         "batch_seq", "fmt", "n_docs", "chars_recovered"
     )
@@ -1929,23 +1802,11 @@ def stream_warc_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "slc", F.expr(f"CAST(doc_id % {_WARC_SLICES} AS INT)")
         )
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_replay",
-        spark.sparkContext.applicationId,
-        "warc_ingest",
-        os.path.basename(os.path.normpath(sf_dir)),
+    base = scratch_dir(spark, "replay_warc_ingest", sf_dir)
+    stream = _stage_sliced(
+        docs, "slc", range(_WARC_SLICES), os.path.join(base, "in")
     )
-    shutil.rmtree(base, ignore_errors=True)
-    in_path = os.path.join(base, "in")
-    _stage_sliced(docs, "slc", range(_WARC_SLICES), in_path)
-
     sink = NativeTableSink(spark, os.path.join(base, "tallies"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
-    )
 
     def land_batch(bdf: DataFrame, bid: int) -> None:
         parsed = bdf.select("doc_id", "source", "text").mapInPandas(
@@ -1991,21 +1852,13 @@ def stream_warc_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink.insert_batch(tally, bid)
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_replay_width(spark, [docs]))
+    _run_available_now(
+        spark,
+        stream,
+        os.path.join(base, "ckpt"),
+        land_batch,
+        _replay_width(spark, [docs]),
     )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(land_batch)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return sink.read().select(
         "batch_seq", "n_docs", "n_truncated", "n_clean_recovered",
         "chars_clean",
@@ -2110,15 +1963,7 @@ def stream_drift_monitor_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rs_streamloader_spark.sinks.native import NativeTableSink
 
     ev = _events(spark, sf_dir).select("ts", "event_id", "value")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rs_sl_replay",
-        spark.sparkContext.applicationId,
-        "drift_mon",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    in_path = os.path.join(base, "in")
+    base = scratch_dir(spark, "replay_drift_mon", sf_dir)
     # harness-only single-partition sort fabricating arrival order
     # (the measured operator is the drift protocol, which never sees
     # it — same contract as stream_maintenance_pin_replay). Staged in
@@ -2127,17 +1972,12 @@ def stream_drift_monitor_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliced = ev.withColumn(
         "slc", F.ntile(_DRIFT_SLICES).over(W.orderBy("ts", "event_id"))
     )
-    _stage_sliced(sliced, "slc", range(1, _DRIFT_SLICES + 1), in_path)
+    stream = _stage_sliced(
+        sliced, "slc", range(1, _DRIFT_SLICES + 1), os.path.join(base, "in")
+    )
 
     hist_store = NativeTableSink(spark, os.path.join(base, "hist"))
     verdicts = NativeTableSink(spark, os.path.join(base, "verdicts"))
-    stream = (
-        spark.readStream.schema(
-            sliced.select("ts", "event_id", "value", "slc").schema
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
-    )
 
     def land(bdf: DataFrame, bid: int) -> None:
         # ONE job: the batch's ≤{bins}-row histogram (bounded by
@@ -2218,21 +2058,13 @@ def stream_drift_monitor_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rows), and replays are exactly-once by construction
         hist_store.insert_batch(dense, bid)
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_replay_width(spark, [ev]))
+    _run_available_now(
+        spark,
+        stream,
+        os.path.join(base, "ckpt"),
+        land,
+        _replay_width(spark, [ev]),
     )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(land)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return verdicts.read().select(
         "batch_seq", "n_events", "n_history", "w1_micro", "drift_alert"
     )

@@ -70,9 +70,12 @@ def main() -> None:
             results[name] = round(best, 3)
             print(f"TIME {name}: {best:.3f}s", flush=True)
             if plans_dir:
+                # explain the last timed frame: calling fn again would
+                # re-run a replay's streaming job and empty the scratch
+                # dir that frame reads
                 os.makedirs(os.path.join(_REPO_ROOT, plans_dir), exist_ok=True)
-                txt = fn(spark, sf_dir)._sc._jvm.PythonSQLUtils.explainString(
-                    fn(spark, sf_dir)._jdf.queryExecution(), "formatted"
+                txt = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
                 )
                 out = os.path.join(
                     _REPO_ROOT, plans_dir, f"{name}_{suffix}.txt"
